@@ -343,17 +343,6 @@ def shingle_profile(df: DataFrame, cfg: SketchConfig,
     )
 
 
-def hash_sequence_udf(cfg: SketchConfig, seed: int | None = None):
-    """text -> array<long> positional hash sequence (parity/debug surface,
-    reference ``hash_sequence``)."""
-
-    def run(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for texts in batches:
-            yield pd.Series([K.u64_to_i64(cfg.hash_sequence(t or "", seed)) for t in texts])
-
-    return F.pandas_udf(run, ArrayType(LongType()))
-
-
 def add_sketch(df: DataFrame, cfg: SketchConfig, text_col: str = "text") -> DataFrame:
     from ..util import spread_small_input
 

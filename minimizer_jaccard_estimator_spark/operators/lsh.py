@@ -148,21 +148,6 @@ def lsh_candidate_pairs(
     return pairs
 
 
-def lsh_dropped_buckets(
-    signatures: DataFrame, cfg: SketchConfig, id_col: str = "conv_id",
-    max_bucket_size: int | None = 1000,
-) -> DataFrame:
-    """(band_id, band_hash, n_docs) of the buckets the cap WOULD drop — no
-    silent truncation: the dedup pipeline materializes this as a lineage
-    table so a capped run reports exactly which boilerplate buckets were
-    excluded (their exact dups are still caught by the digest fast path)."""
-    b = band_hashes(signatures, cfg, id_col)
-    sizes = b.groupBy("band_id", "band_hash").agg(F.count("*").alias("n_docs"))
-    if max_bucket_size is None:
-        return sizes.limit(0)
-    return sizes.where(F.col("n_docs") > max_bucket_size)
-
-
 def simhash_filter(pairs_with_simhash: DataFrame, max_hamming: int = 16) -> DataFrame:
     """Secondary near-dup prefilter: keep pairs whose 64-bit SimHashes are
     within ``max_hamming`` bits.  Expects columns simhash_a / simhash_b."""

@@ -44,9 +44,17 @@ def attach_pair_columns_zip(
     ``per_doc`` is reproduced by the IS NOT NULL filters, which cannot
     distinguish a null payload from a missing doc).  Both hold for every
     dedup verify call (pairs are deduplicated, sketch columns are
-    non-nullable arrays/longs).  Output rows and schema are identical to
-    attach_pair_columns up to row order.
+    non-nullable arrays/longs).  ``pairs`` must hold only ``id_a`` and
+    ``id_b``; any other column raises ``ValueError`` (the reassembly keys on
+    the pair alone and could not carry it).  Under these preconditions the
+    output rows and schema are identical to attach_pair_columns up to row
+    order.
     """
+    extra = [c for c in pairs.columns if c not in ("id_a", "id_b")]
+    if extra:
+        raise ValueError(
+            f"attach_pair_columns_zip takes (id_a, id_b) pairs only; got extra columns {extra}"
+        )
     doc = F.col("_k.doc")
     sides = pairs.select(
         F.explode(
@@ -88,33 +96,6 @@ def attach_pair_columns_zip(
             nn = F.col(f"{c}_{t}").isNotNull()
             cond = nn if cond is None else (cond & nn)
     return out.where(cond)
-
-
-def signature_estimate(
-    candidates: DataFrame,
-    signatures: DataFrame,
-    id_col: str = "conv_id",
-    sig_col: str = "minhash",
-) -> DataFrame:
-    """(id_a, id_b, j_sig): MinHash agreement fraction per candidate pair.
-
-    The cheap pre-verify: signatures are num_perm longs (~1KB) vs full
-    minimizer arrays (~10x more), so estimating J from slot agreement first
-    and only shipping arrays for plausible pairs cuts the verify shuffle.
-    std(j_sig) = sqrt(J(1-J)/num_perm) ≈ 0.044 at 128 perms.  NOTE: j_sig
-    estimates the SHINGLE-set Jaccard while the accept test runs on the
-    minimizer-set Jaccard, which is positively biased vs the true Jaccard
-    (the very bias correction.py quantifies) — so the filter margin must
-    budget for sampling noise AND that bias; see verify_pairs_staged.
-    """
-    joined = attach_pair_columns(candidates, signatures, [sig_col], id_col)
-    a, b = f"{sig_col}_a", f"{sig_col}_b"
-    agree = F.size(
-        F.filter(F.zip_with(a, b, lambda x, y: x == y), lambda eq: eq)
-    )
-    return joined.select(
-        "id_a", "id_b", (agree / F.size(a)).alias("j_sig")
-    )
 
 
 def verify_pairs_staged(
@@ -188,14 +169,17 @@ def verify_pairs(
     ``jaccard_by_minimizers``: set-of-values Jaccard, zero union → J = 0.
 
     ``min_score`` is an EXACT accept-side pruning gate for callers that only
-    consume pairs with j_mini >= min_score (the dedup clusters path): since
-    I <= min(|A|,|B|) and U >= max(|A|,|B|), a pair with
-    min(|A|,|B|) < min_score * max(|A|,|B|) has j_mini strictly below
-    min_score and is dropped BEFORE the array_intersect — two int compares
-    instead of a hash-set build per pruned pair (r06, guide §1.2 "don't
-    compute things you throw away").  Pairs at exactly the ratio bound are
-    kept (j could equal min_score).  Empty-set pairs (|A|=|B|=0) pass the
-    gate and score 0 via the zero-union convention, same as before.  With
+    consume pairs with j_mini >= min_score (the dedup clusters path).
+    I <= min(|A|,|B|) and U >= max(|A|,|B|), so I/U <= min/max as real
+    numbers; correctly rounded division is monotone, so the double I/U
+    never exceeds the double min/max either.  A pair with
+    min(|A|,|B|) / max(|A|,|B|) < min_score therefore has j_mini below
+    min_score in IEEE doubles too, and is dropped BEFORE the
+    array_intersect — a divide and a compare instead of a hash-set build
+    per pruned pair (r06, guide §1.2 "don't compute things you throw
+    away").  Pairs at exactly the ratio bound are kept (j could equal
+    min_score).  Empty-set pairs (|A|=|B|=0) pass the gate and score 0
+    via the zero-union convention, same as before.  With
     ``min_score=None`` every candidate is scored (the ``verified`` output
     contract).
     """
@@ -205,9 +189,12 @@ def verify_pairs(
     _attach = attach_pair_columns_zip if attach == "zip" else attach_pair_columns
     joined = _attach(candidates, sets, ["_set"], id_col)
     if min_score is not None:
+        # the ratio, not least >= t * greatest: that product can round up
+        # (0.55 * 100 > 55) and prune a 55-in-100 pair that scores exactly t
+        least = F.least(F.size("_set_a"), F.size("_set_b"))
+        greatest = F.greatest(F.size("_set_a"), F.size("_set_b"))
         joined = joined.where(
-            F.least(F.size("_set_a"), F.size("_set_b"))
-            >= F.lit(float(min_score)) * F.greatest(F.size("_set_a"), F.size("_set_b"))
+            (greatest == 0) | (least / greatest >= F.lit(float(min_score)))
         )
     i = F.size(F.array_intersect("_set_a", "_set_b")).cast("long")
     u = (F.size("_set_a") + F.size("_set_b")).cast("long") - i

@@ -74,6 +74,23 @@ def get_spark(
         # the same GB-per-slot sizing rule applies there (guide §5).
         .config("spark.driver.memory",
                 os.environ.get("SPARK_DRIVER_MEMORY", f"{max(8, (cpus * 3) // 4)}g"))
+        # generated-code cache sized to the engine's working set: at the
+        # default 100 entries one dedup pass evicts its own classes, so every
+        # pass Janino-compiles them again and the JVM re-JITs each reloaded
+        # class (measured at local[4]: a warm transcripts_dedup pass compiled
+        # 123 classes, a warm committed delta 243).  One session held 136
+        # distinct classes after a transcripts dedup, 154 after adding the
+        # documents verify workload, and 483 after all three benchmark
+        # workloads; 2048 leaves ~4x headroom over the largest.  Static
+        # conf: it only takes effect when set before the session starts
+        .config("spark.sql.codegen.cache.maxEntries", "2048")
+        # the cache is keyed by the generated source, and the whole-stage id
+        # in the class name varies between runs of one plan with AQE's stage
+        # submission order: with the id, warm passes kept compiling 0-12
+        # classes each; without it, none after the first warm pass (and
+        # delta's first pass reuses its base dedup's classes: 117 compiles
+        # instead of ~180).  explain() still shows the stage ids
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
     )

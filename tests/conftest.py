@@ -1,8 +1,10 @@
 """Shared test fixtures.
 
-The reference implementation at /root/reference is importable as the ORACLE
+The reference implementation at REFERENCE_DIR is importable as the ORACLE
 for parity tests (we run its pure-Python code directly and compare outputs;
-our engine never imports it at runtime).
+our engine never imports it at runtime).  Parity tests reach it only through
+``reference_module`` / ``reference_script``, so they skip, with the reason,
+where no reference checkout exists and every in-repo check still runs.
 """
 
 from __future__ import annotations
@@ -20,6 +22,21 @@ REFERENCE_DIR = "/root/reference"
 sys.path.insert(0, REPO_ROOT)
 if os.path.isdir(REFERENCE_DIR) and REFERENCE_DIR not in sys.path:
     sys.path.append(REFERENCE_DIR)
+
+
+def reference_module(name: str):
+    """Import a module of the reference implementation, or skip the test."""
+    return pytest.importorskip(
+        name, reason=f"reference oracle {name} not importable (no checkout at {REFERENCE_DIR})"
+    )
+
+
+def reference_script(name: str) -> str:
+    """Path of a reference CLI script, or skip the test."""
+    path = os.path.join(REFERENCE_DIR, name)
+    if not os.path.isfile(path):
+        pytest.skip(f"reference CLI {name} absent (no checkout at {REFERENCE_DIR})")
+    return path
 
 
 def random_dna(rng: random.Random, n: int) -> str:

@@ -18,7 +18,7 @@ import sys
 
 import pytest
 
-from tests.conftest import REFERENCE_DIR, mutate_dna, random_dna
+from tests.conftest import mutate_dna, random_dna, reference_script
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -64,7 +64,7 @@ def test_pairwise_cli_canonical_matches_reference(spark, tmp_path, monkeypatch):
     with open(fa) as stdin:
         out = subprocess.run(
             [sys.executable,
-             os.path.join(REFERENCE_DIR, "jaccard_correction_test.py"),
+             reference_script("jaccard_correction_test.py"),
              "K=16", "W=8", "--canonical", "--inhibit:correction"],
             stdin=stdin, capture_output=True, text=True, check=True,
         )
@@ -109,7 +109,7 @@ def test_sliding_cli_canonical_matches_reference(spark, tmp_path, monkeypatch):
 
     with open(rf) as stdin:
         out = subprocess.run(
-            [sys.executable, os.path.join(REFERENCE_DIR, "sliding_jaccard.py"),
+            [sys.executable, reference_script("sliding_jaccard.py"),
              str(qf), "K=16", "W=8", "--canonical", "--minimizers:local"],
             stdin=stdin, capture_output=True, text=True, check=True,
         )

@@ -1,5 +1,6 @@
 """Bias-correction parity: our vectorized correction kernel vs the reference
-``jaccard_correction`` run directly on the same hash sequences."""
+``jaccard_correction`` run directly on the same hash sequences (every case
+skips without a reference checkout)."""
 
 from __future__ import annotations
 
@@ -8,16 +9,20 @@ import random
 import numpy as np
 import pytest
 
-import jaccard_correction_test as ref_mod
 from minimizer_jaccard_estimator_spark import correction as C
 from minimizer_jaccard_estimator_spark import kernels as K
 from minimizer_jaccard_estimator_spark import pairwise as P
-from tests.conftest import mutate_dna, random_dna
-
-ref_mod.debug = []  # module global normally set in main()
+from tests.conftest import mutate_dna, random_dna, reference_module, reference_script
 
 
-def _ref_correction(hash_a, hash_b, w):
+@pytest.fixture(scope="module")
+def ref_mod():
+    mod = reference_module("jaccard_correction_test")
+    mod.debug = []  # module global normally set in main()
+    return mod
+
+
+def _ref_correction(ref_mod, hash_a, hash_b, w):
     ref_mod.tVal = None  # reference caches tVal per w; reset between configs
     return ref_mod.jaccard_correction("A", tuple(int(x) for x in hash_a),
                                       "B", tuple(int(x) for x in hash_b), w)
@@ -37,10 +42,10 @@ def _dupfree_pair(seed: int, n: int, k: int, rate: float):
 
 
 @pytest.mark.parametrize("w,n,rate", [(5, 80, 0.05), (8, 200, 0.02), (20, 400, 0.1), (12, 300, 0.0)])
-def test_correction_parity_random_pairs(w, n, rate):
+def test_correction_parity_random_pairs(ref_mod, w, n, rate):
     a, b, ha, hb = _dupfree_pair(1000 + w, n, 16, rate)
     ours = C.jaccard_correction(ha, hb, w)
-    ref = _ref_correction(ha, hb, w)
+    ref = _ref_correction(ref_mod, ha, hb, w)
     assert ours.script_d == ref.scriptD
     assert ours.jaccard_from_d == pytest.approx(ref.jaccardFromD, abs=1e-12)
     assert ours.script_c == pytest.approx(ref.scriptC, rel=1e-9)
@@ -48,10 +53,10 @@ def test_correction_parity_random_pairs(w, n, rate):
 
 
 @pytest.mark.parametrize("w", [4, 7])
-def test_configuration_counts_parity_full_tensor(w):
+def test_configuration_counts_parity_full_tensor(ref_mod, w):
     a, b, ha, hb = _dupfree_pair(77 + w, 120, 12, 0.08)
     ours = C.configuration_counts(ha, hb, w)
-    ref = _ref_correction(ha, hb, w)
+    ref = _ref_correction(ref_mod, ha, hb, w)
     ref_counts = {}
     for s, per in ref.nConfigurations.items():
         for cfg, cnt in per.items():
@@ -60,7 +65,7 @@ def test_configuration_counts_parity_full_tensor(w):
     assert ours == ref_counts
 
 
-def test_position_map_parity_and_duplicate_detection():
+def test_position_map_parity_and_duplicate_detection(ref_mod):
     a, b, ha, hb = _dupfree_pair(5, 150, 14, 0.05)
     ours = C.position_map(ha, hb)
     ref_map = ref_mod.shared_hash_positions(tuple(int(x) for x in ha), tuple(int(x) for x in hb))
@@ -72,19 +77,19 @@ def test_position_map_parity_and_duplicate_detection():
         C.position_map(np.array([1, 2, 1], dtype=np.uint64), np.array([3], dtype=np.uint64))
 
 
-def test_identical_pair_bias_zero_ish():
+def test_identical_pair_bias_zero_ish(ref_mod):
     """A vs A: every window pair on the diagonal shares everything; sanity
     bounds rather than exact values."""
     _, _, ha, _ = _dupfree_pair(9, 150, 16, 0.0)
     ours = C.jaccard_correction(ha, ha, 10)
-    ref = _ref_correction(ha, ha, 10)
+    ref = _ref_correction(ref_mod, ha, ha, 10)
     # A vs A: car==0 & cbr==0 only on the diagonal -> scriptD = L - w
     assert ours.script_d == ref.scriptD == ha.size - 10
     assert ours.script_c == pytest.approx(ref.scriptC, rel=1e-9)
 
 
 def _ref_correction_v04(hash_a, hash_b, w, debug):
-    import jaccard_correction_test_v_0_4 as ref_v04
+    ref_v04 = reference_module("jaccard_correction_test_v_0_4")
 
     ref_v04.debug = debug  # module global normally set in main()
     ref_v04.g_func_hash = {}  # per-run cache (keyed on w,s,alpha,beta — safe, but reset anyway)
@@ -129,7 +134,6 @@ def test_correction_v04_omitted_term_toggle(w, n):
 def test_config_report_matches_reference_cli(spark, tmp_path):
     """config_report's long rows == the reference CLI's --report:configs
     17x(w+1) wide columns (``jaccard_correction_test.py:256-282,371-413``)."""
-    import os
     import re
     import subprocess
     import sys
@@ -137,8 +141,6 @@ def test_config_report_matches_reference_cli(spark, tmp_path):
     from minimizer_jaccard_estimator_spark.functions.sketch import SketchConfig
     from minimizer_jaccard_estimator_spark.operators.pairwise_analytics import (
         VIABLE_CONFIGURATIONS, config_report)
-    from tests.conftest import REFERENCE_DIR
-
     w, k = 8, 16
     a, b, _, _ = _dupfree_pair(321, 150, k, 0.06)
     fa = tmp_path / "pair.fa"
@@ -146,7 +148,7 @@ def test_config_report_matches_reference_cli(spark, tmp_path):
 
     with open(fa) as stdin:
         out = subprocess.run(
-            [sys.executable, os.path.join(REFERENCE_DIR, "jaccard_correction_test.py"),
+            [sys.executable, reference_script("jaccard_correction_test.py"),
              f"K={k}", f"W={w}", "--report:configs"],
             stdin=stdin, capture_output=True, text=True, check=True,
         )
@@ -188,15 +190,12 @@ def test_config_report_wide_column_layout_parity(spark, tmp_path):
     values (``jaccard_correction_test.py:270-282,404-413``).  Uses the same
     deterministic dup-free DNA pair as the long-form parity test (the
     reference dies on pairs with duplicate hashes)."""
-    import os
     import subprocess
     import sys
 
     from minimizer_jaccard_estimator_spark.functions.sketch import SketchConfig
     from minimizer_jaccard_estimator_spark.operators.pairwise_analytics import (
         config_report_wide, wide_config_columns)
-    from tests.conftest import REFERENCE_DIR
-
     w, k = 8, 16
     a, b, _, _ = _dupfree_pair(321, 150, k, 0.06)
     fa = tmp_path / "pair.fa"
@@ -204,7 +203,7 @@ def test_config_report_wide_column_layout_parity(spark, tmp_path):
 
     with open(fa) as stdin:
         out = subprocess.run(
-            [sys.executable, os.path.join(REFERENCE_DIR, "jaccard_correction_test.py"),
+            [sys.executable, reference_script("jaccard_correction_test.py"),
              f"K={k}", f"W={w}", "--report:configs"],
             stdin=stdin, capture_output=True, text=True, check=True,
         )
@@ -229,7 +228,7 @@ def test_config_report_wide_column_layout_parity(spark, tmp_path):
     assert got_vals == ref_vals
 
 
-def test_pairwise_report_duplicates_columns(spark):
+def test_pairwise_report_duplicates_columns(spark, ref_mod):
     """report_duplicates=True adds the reference's --report:duplicates
     columns: per-side duplicated-hash-position counts (count_duplicates)."""
     from minimizer_jaccard_estimator_spark.functions.sketch import SketchConfig
@@ -256,7 +255,7 @@ def test_pairwise_report_duplicates_columns(spark):
     assert "n_dups_a" not in pairwise_report(pairs, cfg).columns
 
 
-def test_check_duplicates_operator(spark):
+def test_check_duplicates_operator(spark, ref_mod):
     """check_duplicates == the reference's --debug=checkduplicates verdict
     (``jaccard_correction_test.py:338-347``) per document."""
     from minimizer_jaccard_estimator_spark.functions.sketch import SketchConfig
@@ -282,7 +281,7 @@ def test_check_duplicates_operator(spark):
     assert rows["tiny"]["n_hashes"] == 0 and rows["tiny"]["dup_free"] == 1
 
 
-def test_pairwise_jaccard_matches_reference_functions():
+def test_pairwise_jaccard_matches_reference_functions(ref_mod):
     rng = random.Random(11)
     a = random_dna(rng, 500)
     b = mutate_dna(rng, a, 0.05)

@@ -1,11 +1,12 @@
 """Kernel parity tests: our numpy uint64 kernels vs the reference
-implementation (imported from /root/reference as the oracle) and vs naive
-re-derivations.  Mirrors the reference's own dual-implementation test pattern
-(``jaccard_correction_test.py:653-660``)."""
+implementation (the ``ref`` fixture; those cases skip without a reference
+checkout) and vs naive re-derivations.  Mirrors the reference's own
+dual-implementation test pattern (``jaccard_correction_test.py:653-660``)."""
 
 from __future__ import annotations
 
 import random
+from types import SimpleNamespace
 
 import numpy as np
 import pytest
@@ -13,16 +14,21 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from minimizer_jaccard_estimator_spark import kernels as K
-from tests.conftest import mutate_dna, random_dna
+from tests.conftest import mutate_dna, random_dna, reference_module
+
 
 # --- reference oracles -----------------------------------------------------
-from minimap2_hash_uncompiled import minimap2_hash as ref_minimap2
-from murmurhash3_uncompiled import murmurhash3 as ref_murmur
-from splitmix64_hash_uncompiled import splitmix64_hash as ref_splitmix
-from winnowed_minimizers import (
-    winnowed_minimizers_circular as ref_winnow_circ,
-    winnowed_minimizers_linear as ref_winnow,
-)
+@pytest.fixture(scope="module")
+def ref():
+    winnow = reference_module("winnowed_minimizers")
+    return SimpleNamespace(
+        minimap2=reference_module("minimap2_hash_uncompiled").minimap2_hash,
+        murmur=reference_module("murmurhash3_uncompiled").murmurhash3,
+        splitmix=reference_module("splitmix64_hash_uncompiled").splitmix64_hash,
+        winnow=winnow.winnowed_minimizers_linear,
+        winnow_circ=winnow.winnowed_minimizers_circular,
+    )
+
 
 U64MAX = (1 << 64) - 1
 
@@ -32,33 +38,33 @@ vals_st = st.integers(min_value=0, max_value=U64MAX)
 
 @settings(max_examples=200, deadline=None)
 @given(seed=seeds_st, v=vals_st, k=st.integers(min_value=2, max_value=32))
-def test_minimap2_hash_parity(seed, v, k):
+def test_minimap2_hash_parity(ref, seed, v, k):
     mask = (4 ** k) - 1
     v &= mask
     ours = K.minimap2_hash(seed, np.array([v], dtype=np.uint64), mask)[0]
-    assert int(ours) == ref_minimap2(seed, v, mask)
+    assert int(ours) == ref.minimap2(seed, v, mask)
 
 
 @settings(max_examples=200, deadline=None)
 @given(seed=seeds_st, v=vals_st)
-def test_splitmix64_hash_parity(seed, v):
+def test_splitmix64_hash_parity(ref, seed, v):
     ours = K.splitmix64_hash(seed, np.array([v], dtype=np.uint64))[0]
-    assert int(ours) == ref_splitmix(seed, v)
+    assert int(ours) == ref.splitmix(seed, v)
 
 
-def test_splitmix64_carry_edge():
+def test_splitmix64_carry_edge(ref):
     # v + (seed ^ pi_constant) overflows 2**64 — the unbounded-int carry path
     seed = U64MAX
     for v in (U64MAX, U64MAX - 1, 1 << 63, 12345):
         ours = K.splitmix64_hash(seed, np.array([v], dtype=np.uint64))[0]
-        assert int(ours) == ref_splitmix(seed, v)
+        assert int(ours) == ref.splitmix(seed, v)
 
 
 @settings(max_examples=200, deadline=None)
 @given(seed=seeds_st, v=vals_st, which=st.sampled_from(["xor", "h1", "h2", "+"]))
-def test_murmurhash3_parity(seed, v, which):
+def test_murmurhash3_parity(ref, seed, v, which):
     ours = K.murmurhash3(seed, np.array([v], dtype=np.uint64), which=which)[0]
-    assert int(ours) == ref_murmur(seed, v, which=which)
+    assert int(ours) == ref.murmur(seed, v, which=which)
 
 
 def test_pack_kmers_2bit_vs_naive():
@@ -150,13 +156,13 @@ def test_hash_dna_sequence_canonical_sentinel():
         assert (int(v) == sent) == (i in expect_bad)
 
 
-def test_hash_dna_sequence_parity_all_hashes():
+def test_hash_dna_sequence_parity_all_hashes(ref):
     rng = random.Random(3)
     seq = random_dna(rng, 300)
     for hash_type, ref_fn in (
-        ("minimap2", lambda s, v, k: ref_minimap2(s, v, (4 ** k) - 1)),
-        ("splitmix64", lambda s, v, k: ref_splitmix(s, v)),
-        ("murmurhash3", lambda s, v, k: ref_murmur(s, v)),
+        ("minimap2", lambda s, v, k: ref.minimap2(s, v, (4 ** k) - 1)),
+        ("splitmix64", lambda s, v, k: ref.splitmix(s, v)),
+        ("murmurhash3", lambda s, v, k: ref.murmur(s, v)),
     ):
         for k, seed in ((8, 0), (16, 0xDEADBEEF), (16, U64MAX)):
             ours = K.hash_dna_sequence(seq, k, hash_type, seed)
@@ -172,8 +178,8 @@ def test_hash_dna_sequence_parity_all_hashes():
 
 # --- winnower ---------------------------------------------------------------
 
-def _ref_winnow_list(vals, w):
-    return list(ref_winnow(tuple(vals), w))
+def _ref_winnow_list(ref, vals, w):
+    return list(ref.winnow(tuple(vals), w))
 
 
 @settings(max_examples=200, deadline=None)
@@ -181,10 +187,10 @@ def _ref_winnow_list(vals, w):
     vals=st.lists(st.integers(min_value=0, max_value=U64MAX), min_size=0, max_size=200),
     w=st.integers(min_value=2, max_value=30),
 )
-def test_winnow_parity_random(vals, w):
+def test_winnow_parity_random(ref, vals, w):
     v, p = K.winnow_minimizers(np.array(vals, dtype=np.uint64), w)
-    ref = _ref_winnow_list(vals, w)
-    assert list(zip(v.tolist(), p.tolist())) == ref
+    expect = _ref_winnow_list(ref, vals, w)
+    assert list(zip(v.tolist(), p.tolist())) == expect
 
 
 @settings(max_examples=100, deadline=None)
@@ -192,12 +198,12 @@ def test_winnow_parity_random(vals, w):
     vals=st.lists(st.integers(min_value=0, max_value=5), min_size=0, max_size=100),
     w=st.integers(min_value=2, max_value=10),
 )
-def test_winnow_parity_heavy_duplicates(vals, w):
+def test_winnow_parity_heavy_duplicates(ref, vals, w):
     """The reference 'expects unique values' but its deque has well-defined
     duplicate behavior (strictly-greater pop => oldest wins); replicate it."""
     v, p = K.winnow_minimizers(np.array(vals, dtype=np.uint64), w)
-    ref = _ref_winnow_list(vals, w)
-    assert list(zip(v.tolist(), p.tolist())) == ref
+    expect = _ref_winnow_list(ref, vals, w)
+    assert list(zip(v.tolist(), p.tolist())) == expect
 
 
 def test_winnow_short_sequence_yields_nothing():
@@ -210,13 +216,13 @@ def test_winnow_short_sequence_yields_nothing():
     vals=st.lists(st.integers(min_value=0, max_value=U64MAX), min_size=2, max_size=100, unique=True),
     w=st.integers(min_value=2, max_value=12),
 )
-def test_winnow_circular_parity(vals, w):
+def test_winnow_circular_parity(ref, vals, w):
     # the reference circular winnower indexes perm[ix-len] and so requires
     # w <= len(perm)+1; stay inside its valid domain
     w = min(w, len(vals))
     v, p = K.winnow_minimizers_circular(np.array(vals, dtype=np.uint64), w)
-    ref = {(val, pos % len(vals)) for (val, pos) in ref_winnow_circ(tuple(vals), w)}
-    assert set(zip(v.tolist(), p.tolist())) == ref
+    expect = {(val, pos % len(vals)) for (val, pos) in ref.winnow_circ(tuple(vals), w)}
+    assert set(zip(v.tolist(), p.tolist())) == expect
 
 
 # --- seed family ------------------------------------------------------------

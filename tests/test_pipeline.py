@@ -481,9 +481,11 @@ def test_verify_min_score_gate_is_exact(spark):
     """verify_pairs(min_score=t) restricted to j >= t == the ungated verify
     restricted to j >= t (the size-ratio gate may only prune pairs that
     PROVABLY score below t), across mismatched-size, equal, and empty-set
-    pairs."""
+    pairs, and in IEEE doubles: a 55-element set inside a 100-element set
+    scores j = 0.55 although 0.55 * 100 == 55.000000000000007 > 55."""
     from minimizer_jaccard_estimator_spark.operators.verify import verify_pairs
 
+    assert 0.55 * 100 > 55  # the rounding the d6/d7 pair pins
     sketches = spark.createDataFrame(
         [
             ("d1", [1, 2, 3, 4, 5, 6, 7, 8]),
@@ -491,26 +493,39 @@ def test_verify_min_score_gate_is_exact(spark):
             ("d3", [1, 2, 3]),                   # size ratio 3/8 < 0.5 vs d1
             ("d4", []),                          # empty set
             ("d5", [1, 2, 3, 4]),                # ratio vs d1 = exactly 0.5
+            ("d6", list(range(100, 155))),       # 55 of d7's 100: j = 0.55
+            ("d7", list(range(100, 200))),
         ],
         ["conv_id", "minimizers"],
     )
     pairs = spark.createDataFrame(
-        [("d1", "d2"), ("d1", "d3"), ("d1", "d4"), ("d4", "d4"), ("d1", "d5")],
+        [("d1", "d2"), ("d1", "d3"), ("d1", "d4"), ("d4", "d4"), ("d1", "d5"),
+         ("d6", "d7")],
         ["id_a", "id_b"],
     )
-    t = 0.5
-    ungated = {
-        (r["id_a"], r["id_b"], r["i_mini"], r["u_mini"], r["j_mini"])
-        for r in verify_pairs(pairs, sketches).where(F.col("j_mini") >= t).collect()
-    }
-    gated = verify_pairs(pairs, sketches, min_score=t)
-    got = {
-        (r["id_a"], r["id_b"], r["i_mini"], r["u_mini"], r["j_mini"])
-        for r in gated.where(F.col("j_mini") >= t).collect()
-    }
-    assert got == ungated
+    for t in (0.5, 0.55):
+        ungated = {
+            (r["id_a"], r["id_b"], r["i_mini"], r["u_mini"], r["j_mini"])
+            for r in verify_pairs(pairs, sketches).where(F.col("j_mini") >= t).collect()
+        }
+        gated = verify_pairs(pairs, sketches, min_score=t)
+        got = {
+            (r["id_a"], r["id_b"], r["i_mini"], r["u_mini"], r["j_mini"])
+            for r in gated.where(F.col("j_mini") >= t).collect()
+        }
+        assert got == ungated
+        assert ("d6", "d7", 55, 100, 0.55) in got
     # the boundary-ratio pair (exactly t * max) must NOT be pruned by the gate
-    assert {"d5"} <= {r["id_b"] for r in gated.collect()}
+    assert {"d5"} <= {r["id_b"] for r in verify_pairs(pairs, sketches, min_score=0.5).collect()}
+
+
+def test_attach_zip_rejects_extra_pair_columns(spark):
+    from minimizer_jaccard_estimator_spark.operators.verify import attach_pair_columns_zip
+
+    pairs = spark.createDataFrame([("a", "b", 1.0)], ["id_a", "id_b", "score"])
+    per_doc = spark.createDataFrame([("a", 1), ("b", 2)], ["conv_id", "v"])
+    with pytest.raises(ValueError, match="score"):
+        attach_pair_columns_zip(pairs, per_doc, ["v"])
 
 
 def test_global_row_numbers_string_keys_ranged(spark):

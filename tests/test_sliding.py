@@ -1,10 +1,10 @@
 """Sliding-Jaccard parity: our O(n) vectorized operator vs the reference CLI
-(``/root/reference/sliding_jaccard.py``) run as a subprocess on the same
-FASTA input, row for row, in BOTH minimizer modes."""
+``sliding_jaccard.py`` run as a subprocess on the same FASTA input, row for
+row, in BOTH minimizer modes (those cases skip without a reference
+checkout)."""
 
 from __future__ import annotations
 
-import os
 import random
 import subprocess
 import sys
@@ -18,7 +18,7 @@ from minimizer_jaccard_estimator_spark.operators.sliding import (
     sliding_jaccard,
     sliding_jaccard_kernel,
 )
-from tests.conftest import REFERENCE_DIR, mutate_dna, random_dna
+from tests.conftest import mutate_dna, random_dna, reference_script
 
 K, W = 8, 5
 
@@ -46,7 +46,7 @@ def _make_fixture(tmp_path):
 def _run_reference(qf, rf, mode):
     with open(rf) as stdin:
         out = subprocess.run(
-            [sys.executable, os.path.join(REFERENCE_DIR, "sliding_jaccard.py"),
+            [sys.executable, reference_script("sliding_jaccard.py"),
              qf, f"K={K}", f"W={W}", f"--minimizers:{mode}"],
             stdin=stdin, capture_output=True, text=True, check=True,
         )
