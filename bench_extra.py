@@ -1,14 +1,17 @@
 #!/usr/bin/env python3
-"""Round-6 optimization harness: per-stage / per-query noop-sink timings.
+"""Round-6 optimization harness: per-query noop-sink timings.
 
 NOT part of the frozen measurement contract (bench.py is).  Guide §1.4/§1.5:
 each unit is timed against the noop sink with a job description, repeated
 $SPARK_GRAFT_BENCH_REPEATS times (default 2), reporting min and spread.
 
 Usage:
-  python bench_extra.py stages   [sf_dir]   # dedup_documents stage split
-  python bench_extra.py queries  [sf_dir]   # heavy declared queries (noop)
-  python bench_extra.py pipeline [sf]       # dedup_pipeline stage split
+  python bench_extra.py queries [sf_dir] [name,...]   # heavy declared queries (noop)
+
+For the dedup pipeline's per-layer split (sketch, LSH, verify, CC), run the
+engine itself traced, with its clusters checked against an untraced pass:
+  python3 perfbench/run.py --workload transcripts_dedup --seed 1 --seconds 10 --trace 1
+(or --workload documents_verify).
 """
 
 from __future__ import annotations
@@ -21,28 +24,8 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
-import pyspark.sql.functions as F  # noqa: E402
-
 import __spark_entry__ as entry_mod  # noqa: E402
-from minimizer_jaccard_estimator_spark.functions.sketch import add_full_sketch  # noqa: E402
-from minimizer_jaccard_estimator_spark.operators.connected_components import (  # noqa: E402
-    connected_components,
-)
-from minimizer_jaccard_estimator_spark.operators.dedup import DedupConfig, run_dedup  # noqa: E402
-from minimizer_jaccard_estimator_spark.operators.lsh import (  # noqa: E402
-    exact_dup_pairs,
-    lsh_candidate_pairs,
-    text_digest,
-)
-from minimizer_jaccard_estimator_spark.operators.verify import (  # noqa: E402
-    verify_pairs,
-    verify_pairs_staged,
-)
 from minimizer_jaccard_estimator_spark.plans.session import get_spark  # noqa: E402
-from minimizer_jaccard_estimator_spark.sources.transcripts import (  # noqa: E402
-    assemble_conversations,
-    synthetic_transcripts,
-)
 
 REPEATS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "2")))
 
@@ -68,62 +51,10 @@ def make_timer(spark, timings, spreads):
     return timed
 
 
-def dedup_stage_split(spark, transcripts, cfg: DedupConfig, timed) -> None:
-    """Mirror run_dedup's store-less path stage by stage (same configs,
-    same persists) so wall attributes to stages."""
-    from dataclasses import replace
-
-    conv_text = assemble_conversations(transcripts).persist()
-    timed("assemble", lambda: noop(conv_text))
-
-    src = conv_text.select("conv_id", "text")
-    if cfg.rebalance_sketch:
-        src = src.repartition(spark.sparkContext.defaultParallelism * 2)
-    sk_cfg = replace(cfg.sketch, include_positions=False)
-    sk = add_full_sketch(src, sk_cfg).withColumn(
-        "digest", text_digest(F.col("text"))).drop("text")
-    sketches = sk.persist()
-    timed("sketch", lambda: noop(sketches))
-
-    exact = exact_dup_pairs(
-        conv_text, digests=sketches.select("conv_id", "digest")).persist()
-    timed("exact_dup", lambda: exact.count())
-
-    lsh = lsh_candidate_pairs(
-        sketches.select("conv_id", "minhash"), cfg.sketch,
-        max_bucket_size=cfg.max_bucket_size, distinct=False)
-    candidates = exact.union(lsh).distinct().persist()
-    timed("lsh_candidates", lambda: noop(candidates))
-
-    if cfg.staged_verify:
-        verified = verify_pairs_staged(
-            candidates,
-            sketches.select("conv_id", "minimizers", "minhash", "n_shingles"),
-            cfg.jaccard_threshold, cfg.staged_verify_margin)
-    else:
-        verified = verify_pairs(
-            candidates, sketches.select("conv_id", "minimizers"))
-    verified = verified.persist()
-    timed("verify", lambda: noop(verified))
-
-    def cc():
-        accepted = verified.where(
-            F.col("j_mini") >= cfg.jaccard_threshold).select("id_a", "id_b")
-        accepted = accepted.union(exact)
-        comp = connected_components(accepted)
-        clusters = (
-            conv_text.select("conv_id").join(comp, "conv_id", "left")
-            .select("conv_id", F.coalesce("cluster_id", "conv_id").alias("cluster_id"))
-        )
-        noop(clusters)
-
-    timed("cc_clusters", cc)
-    for df in (conv_text, sketches, exact, candidates, verified):
-        df.unpersist()
-
-
 def main() -> None:
     what = sys.argv[1] if len(sys.argv) > 1 else "queries"
+    if what != "queries":
+        sys.exit(__doc__)
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark(app_name=f"mje-bench-extra-{what}", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
@@ -131,52 +62,15 @@ def main() -> None:
     spreads: dict[str, float] = {}
     timed = make_timer(spark, timings, spreads)
 
-    if what == "stages":
-        sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf1.0"
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        t = entry_mod._docs_as_transcripts(docs)
-        dedup_stage_split(spark, t, DedupConfig(sketch=entry_mod._SKETCH), timed)
-
-        def full():
-            res = run_dedup(spark, t, DedupConfig(sketch=entry_mod._SKETCH))
-            n = res.clusters.select("cluster_id").distinct().count()
-            res.release()
-            return n
-
-        timed("e2e_run_dedup", full)
-    elif what == "pipeline":
-        sf = float(sys.argv[2]) if len(sys.argv) > 2 else 1.0
-        from bench import SKETCH
-
-        n_base = max(200, int(120_000 * sf))
-        transcripts = synthetic_transcripts(
-            spark, n_base=n_base, dup_factor=2, seed=42,
-            partitions=max(cpus * 2, 8)).persist()
-        transcripts.count()
-        cfg = DedupConfig(sketch=SKETCH, jaccard_threshold=0.5,
-                          staged_verify=True, rebalance_sketch=False)
-        dedup_stage_split(spark, transcripts, cfg, timed)
-
-        def full():
-            res = run_dedup(spark, transcripts, cfg)
-            stats = res.clusters.agg(
-                F.countDistinct("cluster_id").alias("k"),
-                F.count("*").alias("n")).collect()[0]
-            res.release()
-            return stats
-
-        timed("e2e_run_dedup", full)
-        transcripts.unpersist()
-    else:
-        sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf1.0"
-        qmap = entry_mod.queries()
-        names = sys.argv[3].split(",") if len(sys.argv) > 3 else [
-            "ngram_jaccard", "j1_pair_zip_join", "a1_multiset_count",
-            "join_agg_revenue", "token_count", "ann_cosine_topk",
-            "events_window",
-        ]
-        for name in names:
-            timed(name, lambda name=name: noop(qmap[name](spark, sf_dir)))
+    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf1.0"
+    qmap = entry_mod.queries()
+    names = sys.argv[3].split(",") if len(sys.argv) > 3 else [
+        "ngram_jaccard", "j1_pair_zip_join", "a1_multiset_count",
+        "join_agg_revenue", "token_count", "ann_cosine_topk",
+        "events_window",
+    ]
+    for name in names:
+        timed(name, lambda name=name: noop(qmap[name](spark, sf_dir)))
 
     print(json.dumps({"what": what, "timings": timings, "spreads": spreads,
                       "repeats": REPEATS}))

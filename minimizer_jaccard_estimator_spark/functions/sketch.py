@@ -1,8 +1,11 @@
 """Arrow/pandas UDFs wrapping the uint64 sketch kernels.
 
-All heavy per-document work (shingle → hash → winnow → sketch/signature)
-happens in vectorized numpy inside these UDFs; no per-row Python UDFs
-anywhere (BASELINE.json input_hint hard requirement).  Hash values cross the
+One UDF factory, :func:`sketch_udf`, builds every sketch column set
+(:func:`add_sketch`, :func:`add_signature`, :func:`add_full_sketch`) over
+one segmented batch kernel, so all heavy per-document work (shingle → hash
+→ winnow → sketch/signature) happens in vectorized numpy, in text and DNA
+mode alike; no per-row Python UDFs anywhere (BASELINE.json input_hint hard
+requirement).  Hash values cross the
 Spark boundary as LongType via two's-complement reinterpretation
 (:func:`..kernels.u64_to_i64`); all magnitude comparisons stay in uint64
 space inside the kernels.
@@ -10,7 +13,7 @@ space inside the kernels.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from collections.abc import Iterator
 
 import numpy as np
@@ -26,6 +29,8 @@ from pyspark.sql.types import (
 )
 
 from .. import kernels as K
+from ..kernels_batch import batch_sketch
+from ..util import spread_small_input
 
 
 @dataclass(frozen=True)
@@ -60,6 +65,27 @@ class SketchConfig:
     # compares minimizer VALUE sets only); skipping them cuts the sketch
     # UDF's Arrow output ~25% on typical transcripts
     include_positions: bool = True
+
+    def __post_init__(self):
+        # the sketch path branches on these strings; a typo ("OPH", "DNA")
+        # would otherwise silently run the other branch
+        for name, allowed in (
+            ("mode", ("text", "dna")),
+            ("minhash_scheme", ("seeded", "oph")),
+            ("on_invalid", ("raise", "sentinel")),
+            ("hash_type", K.HASH_TYPES),
+        ):
+            if getattr(self, name) not in allowed:
+                raise ValueError(
+                    f"SketchConfig.{name}={getattr(self, name)!r}; expected one of {allowed}"
+                )
+
+    @property
+    def mask_k(self) -> int:
+        """The ``k`` position hashes are computed at: ``self.k`` in DNA mode
+        (minimap2 hashes within ``4**k``), 32 — the full 64-bit domain — for
+        text shingles."""
+        return self.k if self.mode == "dna" else 32
 
     @property
     def lsh_rows(self) -> int:
@@ -97,204 +123,65 @@ class SketchConfig:
         )
 
 
-SKETCH_FIELDS = StructType(
-    [
-        StructField("minimizers", ArrayType(LongType())),
-        StructField("positions", ArrayType(IntegerType())),
-        StructField("n_shingles", LongType()),
-        StructField("n_dups", LongType()),
-    ]
-)
-
-SIG_FIELDS = StructType(
-    [
-        StructField("minhash", ArrayType(LongType())),
-        StructField("simhash", LongType()),
-    ]
-)
+# every sketch column the UDF can emit and its Spark type, in output order
+SKETCH_COLUMNS = {
+    "minimizers": ArrayType(LongType()),
+    "positions": ArrayType(IntegerType()),
+    "n_shingles": LongType(),
+    "n_dups": LongType(),
+    "minhash": ArrayType(LongType()),
+    "simhash": LongType(),
+}
+_SKETCH = ("minimizers", "positions", "n_shingles", "n_dups")
+_SIGNATURE = ("minhash", "simhash")
 
 
-def sketch_udf(cfg: SketchConfig):
-    """text -> struct(minimizers, positions, n_shingles, n_dups).
+def full_sketch_fields(cfg: SketchConfig) -> tuple:
+    """Columns of :func:`add_full_sketch`: all of them, ``positions`` only
+    when ``cfg.include_positions``."""
+    return tuple(f for f in SKETCH_COLUMNS if cfg.include_positions or f != "positions")
 
-    minimizers are the winnowed (w,k) minimizer VALUES in position order
-    (reference ``winnowed_minimizers.py:18-53``); n_dups counts repeated
-    hash values (reference ``jaccard_correction_test.py:770-778``).
 
-    Text mode runs the segmented batch kernel (r06) — no per-document
-    Python, bit-parity pinned; DNA mode keeps the per-document path (parity
-    domain, not the scale path) — same split as ``full_sketch_udf``.
+def sketch_udf(cfg: SketchConfig, fields):
+    """text -> struct of the requested ``fields`` (a subset of
+    :data:`SKETCH_COLUMNS`, in that order), as one Arrow UDF.
+
+    - minimizers / positions: the winnowed (w,k) minimizer VALUES and their
+      positions, in position order (reference ``winnowed_minimizers.py:18-53``);
+    - n_shingles / n_dups: hash sequence length and repeated hash values
+      (reference ``jaccard_correction_test.py:770-778``);
+    - minhash: the reference's hash-replicate axis
+      (``jaccard_correction_test.py:310-331``) vectorized across seeds, or
+      OPH (``cfg.minhash_scheme``);
+    - simhash: 64-bit SimHash over the distinct fingerprints.
+
+    Each Arrow batch runs through the segmented batch kernel
+    (:func:`..kernels_batch.batch_sketch`) in text and DNA mode alike: no
+    per-document Python, and only the components ``fields`` needs.
+    Bit-parity with the per-document kernels is pinned in
+    tests/test_kernels.py.
     """
+    seeds = cfg.seeds() if "minhash" in fields and cfg.minhash_scheme == "seeded" else None
 
-    if cfg.mode == "text":
-        from ..kernels_batch import batch_sketch_text
-
-        def run_text(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-            for texts in batches:
-                cols = batch_sketch_text(
-                    texts, cfg.k, cfg.w, cfg.hash_type, cfg.hash_seed
-                )
-                yield pd.DataFrame(cols)
-
-        return F.pandas_udf(run_text, SKETCH_FIELDS)
-
-    def run(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+    def run_text(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
         for texts in batches:
-            minis, poss, n_sh, n_dup = [], [], [], []
-            for t in texts:
-                h = cfg.hash_sequence(t or "")
-                v, p = K.winnow_minimizers(h, cfg.w)
-                minis.append(K.u64_to_i64(v))
-                poss.append(p.astype(np.int32))
-                n_sh.append(h.shape[0])
-                n_dup.append(K.count_hash_duplicates(h))
-            yield pd.DataFrame(
-                {
-                    "minimizers": minis,
-                    "positions": poss,
-                    "n_shingles": np.array(n_sh, dtype=np.int64),
-                    "n_dups": np.array(n_dup, dtype=np.int64),
-                }
-            )
+            yield pd.DataFrame(batch_sketch(texts, cfg, fields, seeds))
 
-    return F.pandas_udf(run, SKETCH_FIELDS)
+    schema = StructType([StructField(f, SKETCH_COLUMNS[f]) for f in fields])
+    return F.pandas_udf(run_text, schema)
 
 
-def signature_udf(cfg: SketchConfig):
-    """text -> struct(minhash array<long>, simhash long).
-
-    The MinHash axis is the reference's hash-replicate axis
-    (``jaccard_correction_test.py:310-331``) vectorized across seeds.
-
-    Text mode runs the signature-only segmented batch kernel (r06) — no
-    per-document Python and none of the winnow work the full sketch pays;
-    DNA mode keeps the per-document path (same split as
-    ``full_sketch_udf``).
-    """
-    seeds = cfg.seeds()
-
-    if cfg.mode == "text":
-        from ..kernels_batch import batch_signature_text
-
-        def run_text(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-            for texts in batches:
-                cols = batch_signature_text(
-                    texts, cfg.k, cfg.hash_type, cfg.hash_seed,
-                    cfg.minhash_scheme, cfg.num_perm,
-                    seeds if cfg.minhash_scheme != "oph" else None,
-                    cfg.simhash_seed, cfg.hash_type,
-                )
-                yield pd.DataFrame(cols)
-
-        return F.pandas_udf(run_text, SIG_FIELDS)
-
-    def run(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        for texts in batches:
-            sigs, sims = [], []
-            for t in texts:
-                fp = cfg.fingerprints(t or "")
-                sig = cfg.minhash(fp, seeds)
-                sigs.append(K.u64_to_i64(sig))
-                sh = K.simhash64(fp, cfg.simhash_seed, cfg.hash_type)
-                sims.append(sh - (1 << 64) if sh >= (1 << 63) else sh)
-            yield pd.DataFrame({"minhash": sigs, "simhash": np.array(sims, dtype=np.int64)})
-
-    return F.pandas_udf(run, SIG_FIELDS)
-
-
-FULL_FIELDS = StructType(SKETCH_FIELDS.fields + SIG_FIELDS.fields)
-
-
-def _full_fields(cfg: SketchConfig) -> StructType:
-    fields = SKETCH_FIELDS.fields + SIG_FIELDS.fields
-    if not cfg.include_positions:
-        fields = [f for f in fields if f.name != "positions"]
-    return StructType(fields)
-
-
-def full_sketch_udf(cfg: SketchConfig):
-    """text -> struct(minimizers, [positions], n_shingles, n_dups, minhash,
-    simhash) in ONE shingle pass — the dedup pipeline hot path.
-
-    Fingerprints are computed once per document; the (w,k) winnow, the
-    MinHash signature, and SimHash all reuse them.  Semantically identical
-    to sketch_udf + signature_udf composed (equality is tested).
-    ``cfg.include_positions=False`` drops the positions array from the
-    output (parity/debug only; unused by dedup).
-
-    Text mode runs the SEGMENTED batch kernels
-    (:mod:`..kernels_batch`): the whole Arrow batch is concatenated and
-    sketched with one set of numpy calls, removing the per-document Python
-    loop that floored throughput on short documents (VERDICT r04 #4;
-    bit-parity with the per-document kernels is pinned in
-    tests/test_kernels.py).  DNA mode keeps the per-document path (parity
-    domain, not the scale path).
-    """
-    seeds = cfg.seeds()
-    with_pos = cfg.include_positions
-
-    if cfg.mode == "text":
-        from ..kernels_batch import batch_full_sketch_text
-
-        def run_text(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-            for texts in batches:
-                cols = batch_full_sketch_text(
-                    texts, cfg.k, cfg.w, cfg.hash_type, cfg.hash_seed,
-                    cfg.minhash_scheme, cfg.num_perm,
-                    seeds if cfg.minhash_scheme != "oph" else None,
-                    cfg.simhash_seed, cfg.hash_type, with_pos,
-                )
-                yield pd.DataFrame(cols)
-
-        return F.pandas_udf(run_text, _full_fields(cfg))
-
-    def run(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        for texts in batches:
-            minis, poss, n_sh, n_dup, sigs, sims = [], [], [], [], [], []
-            for t in texts:
-                fp = cfg.fingerprints(t or "")
-                if cfg.mode == "dna":
-                    # dna sentinel semantics live in hash_dna_sequence
-                    h = cfg.hash_sequence(t or "")
-                elif fp.size:
-                    # text mode hashes in the full 64-bit domain (mask k=32),
-                    # matching hash_text_shingles — NOT cfg.k, which would
-                    # shrink the minimap2 mask and break parity
-                    h = K.apply_hash(cfg.hash_type, cfg.hash_seed, fp, 32)
-                else:
-                    h = fp
-                v, p = K.winnow_minimizers(h, cfg.w)
-                minis.append(K.u64_to_i64(v))
-                if with_pos:
-                    poss.append(p.astype(np.int32))
-                n_sh.append(h.shape[0])
-                n_dup.append(K.count_hash_duplicates(h))
-                sig = cfg.minhash(fp, seeds)
-                sigs.append(K.u64_to_i64(sig))
-                sh = K.simhash64(fp, cfg.simhash_seed, cfg.hash_type)
-                sims.append(sh - (1 << 64) if sh >= (1 << 63) else sh)
-            cols = {"minimizers": minis}
-            if with_pos:
-                cols["positions"] = poss
-            cols.update(
-                {
-                    "n_shingles": np.array(n_sh, dtype=np.int64),
-                    "n_dups": np.array(n_dup, dtype=np.int64),
-                    "minhash": sigs,
-                    "simhash": np.array(sims, dtype=np.int64),
-                }
-            )
-            yield pd.DataFrame(cols)
-
-    return F.pandas_udf(run, _full_fields(cfg))
+def _with_sketch(df: DataFrame, cfg: SketchConfig, fields, text_col: str) -> DataFrame:
+    s = sketch_udf(cfg, fields)(F.col(text_col)).alias("_sk")
+    return df.select("*", s).select(
+        *df.columns, *[F.col(f"_sk.{f}").alias(f) for f in fields]
+    )
 
 
 def add_full_sketch(df: DataFrame, cfg: SketchConfig, text_col: str = "text") -> DataFrame:
-    s = full_sketch_udf(cfg)(F.col(text_col)).alias("_sk")
-    return df.select("*", s).select(
-        *df.columns,
-        *[F.col(f"_sk.{f.name}").alias(f.name) for f in _full_fields(cfg).fields],
-    )
+    """All sketch columns from ONE shingle pass — the dedup pipeline hot
+    path.  Equal to :func:`add_sketch` then :func:`add_signature` (tested)."""
+    return _with_sketch(df, cfg, full_sketch_fields(cfg), text_col)
 
 
 PROFILE_FIELDS = ArrayType(
@@ -331,8 +218,6 @@ def shingle_profile(df: DataFrame, cfg: SketchConfig,
                     out.append([])
             yield pd.Series(out)
 
-    from ..util import spread_small_input
-
     prof = F.pandas_udf(run, PROFILE_FIELDS)(F.col(text_col)).alias("_p")
     return (
         spread_small_input(df.select(F.col(id_col), F.col(text_col)))
@@ -344,26 +229,8 @@ def shingle_profile(df: DataFrame, cfg: SketchConfig,
 
 
 def add_sketch(df: DataFrame, cfg: SketchConfig, text_col: str = "text") -> DataFrame:
-    from ..util import spread_small_input
-
-    df = spread_small_input(df)
-    s = sketch_udf(cfg)(F.col(text_col)).alias("_sk")
-    return df.select("*", s).select(
-        *df.columns,
-        F.col("_sk.minimizers").alias("minimizers"),
-        F.col("_sk.positions").alias("positions"),
-        F.col("_sk.n_shingles").alias("n_shingles"),
-        F.col("_sk.n_dups").alias("n_dups"),
-    )
+    return _with_sketch(spread_small_input(df), cfg, _SKETCH, text_col)
 
 
 def add_signature(df: DataFrame, cfg: SketchConfig, text_col: str = "text") -> DataFrame:
-    from ..util import spread_small_input
-
-    df = spread_small_input(df)
-    s = signature_udf(cfg)(F.col(text_col)).alias("_sig")
-    return df.select("*", s).select(
-        *df.columns,
-        F.col("_sig.minhash").alias("minhash"),
-        F.col("_sig.simhash").alias("simhash"),
-    )
+    return _with_sketch(spread_small_input(df), cfg, _SIGNATURE, text_col)

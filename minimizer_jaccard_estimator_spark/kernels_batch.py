@@ -1,16 +1,19 @@
-"""Segmented BATCH-level sketch kernels (text mode).
+"""Segmented BATCH-level sketch kernels: the sketch UDF's one batch path.
 
-The per-document Arrow UDF loop in :mod:`.functions.sketch` calls the
-vectorized :mod:`.kernels` once per document; for short documents the
-per-call Python overhead is the cost floor of the pipeline's dominant stage
-(VERDICT r04 #4).  This module computes the full sketch of an ENTIRE Arrow
-batch of documents with one set of numpy operations: all texts are
-concatenated into a single byte array, shingled/hashes/winnowed/signed as
-flat segmented arrays, and only split back into per-document arrays at the
-very end.
+Calling the per-document :mod:`.kernels` once per document makes the
+per-call Python overhead the cost floor of the pipeline's dominant stage on
+short documents (VERDICT r04 #4).  :func:`batch_sketch` instead sketches an
+ENTIRE Arrow batch with one set of numpy operations: the documents'
+fingerprints are concatenated into one flat array, hashed, winnowed and
+signed as segmented arrays, and split back into per-document arrays only at
+the very end.  Text and DNA mode share everything after the fingerprint
+step: text shingles the concatenated utf-8 bytes in one pass, DNA 2-bit
+packs each sequence (``SketchConfig.fingerprints``) and hashes at mask k
+with sentinels passed through, as :func:`.kernels.hash_dna_sequence` does.
 
 Bit-parity contract: for every document the outputs equal the per-document
-kernels exactly (pinned by tests/test_kernels.py batch-parity tests):
+kernels exactly (pinned by tests/test_kernels.py batch-parity tests, in
+both modes):
 
 - shingle fingerprints == :func:`.kernels.shingle_fingerprints` (windows
   crossing a document boundary in the concatenation are masked out);
@@ -20,7 +23,8 @@ kernels exactly (pinned by tests/test_kernels.py batch-parity tests):
   exact);
 - n_dups == :func:`.kernels.count_hash_duplicates` (len - #distinct per
   segment; for invertible hashes #distinct hashes == #distinct
-  fingerprints, murmurhash3 pays a hash-keyed sort for exactness);
+  fingerprints, murmurhash3 and DNA sentinels pay a hash-keyed sort for
+  exactness);
 - OPH signatures == :func:`.kernels.oph_signature`: sort-free slot-min
   scatter via ``np.minimum.at`` (duplicates can't change a min);
   densification is the same nearest-non-empty-to-the-right cyclic borrow,
@@ -29,12 +33,8 @@ kernels exactly (pinned by tests/test_kernels.py batch-parity tests):
   each segment's distinct fingerprints via blocked hash matrices +
   ``np.minimum.reduceat`` (blocks may split a segment; the merge is a
   ``np.minimum`` into the output, which is associative);
-- SimHash == :func:`.kernels.simhash64`: per-bit majority votes via
-  ``np.add.reduceat`` over the unpacked uint8 bit matrix with reduceat
-  groups capped at 255 rows (uint8 sums can't wrap), recombined in int64.
-
-DNA mode keeps the per-document path (parity/debug domain, not the scale
-path).
+- SimHash == :func:`.kernels.simhash64`: per-bit majority votes from
+  per-segment byte histograms, recombined in int64.
 """
 
 from __future__ import annotations
@@ -133,15 +133,16 @@ def _seg_value_sort(vals: np.ndarray, bounds: np.ndarray) -> np.ndarray:
 
 def _segment_distinct(
     fp_all: np.ndarray, h_all: np.ndarray, seg: np.ndarray, n_docs: int,
-    hash_type: str, n_per_seg: np.ndarray,
+    dups_by_sort: bool, n_per_seg: np.ndarray,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Per-segment DISTINCT fingerprints (the np.unique-per-doc domain of the
     seeded MinHash / SimHash kernels) plus the duplicate-hash counts.
 
-    Returns (n_dups, ufp, useg).  For invertible hashes #distinct hashes ==
-    #distinct fingerprints so n_dups falls out of the same sorted pass,
-    while murmurhash3 (collisions possible) pays a second segmented sort of
-    the hashes to count distinct hash values exactly as
+    Returns (n_dups, ufp, useg).  For an invertible hash of every
+    fingerprint #distinct hashes == #distinct fingerprints, so n_dups falls
+    out of the same sorted pass; ``dups_by_sort`` (murmurhash3, whose hashes
+    may collide, or DNA sentinels) pays a second segmented sort of the
+    hashes to count distinct hash values exactly as
     :func:`.kernels.count_hash_duplicates` does.
     """
     if fp_all.shape[0] == 0:
@@ -154,7 +155,7 @@ def _segment_distinct(
     new[0] = True
     new[1:] = (fps[1:] != fps[:-1]) | (seg[1:] != seg[:-1])
     ufp, useg = fps[new], seg[new]
-    if K.hash_is_invertible(hash_type):
+    if not dups_by_sort:
         n_dups = n_per_seg - np.bincount(useg, minlength=n_docs)
     else:
         hs = _seg_value_sort(h_all, bounds)
@@ -307,110 +308,92 @@ def batch_simhash(uh: np.ndarray, useg: np.ndarray, n_docs: int) -> np.ndarray:
 _CHUNK_TEXT_BYTES = 1 << 18
 
 
-def batch_full_sketch_text(
-    texts,
-    k: int,
-    w: int,
-    hash_type: str,
-    hash_seed: int,
-    minhash_scheme: str,
-    num_perm: int,
-    seeds: np.ndarray | None,
-    simhash_seed: int,
-    simhash_hash_type: str,
-    include_positions: bool,
-    chunk_bytes: int = _CHUNK_TEXT_BYTES,
-) -> dict:
-    """Full text-mode sketch of one Arrow batch with no per-document Python.
+def batch_sketch(texts, cfg, fields, seeds: np.ndarray | None = None,
+                 chunk_bytes: int = _CHUNK_TEXT_BYTES) -> dict:
+    """Sketch columns ``fields`` of one Arrow batch with no per-document
+    sketch loop — the single batch entry point of the sketch UDF.
 
-    Returns a dict of columns matching ``full_sketch_udf``'s schema:
-    minimizers / [positions] as lists of per-doc int64 arrays, n_shingles /
-    n_dups / simhash as int64 arrays, minhash as a list of per-doc int64
-    arrays.  Internally the batch is processed in ~``chunk_bytes``-of-text
-    document groups (cache residency — see ``_CHUNK_TEXT_BYTES``).
+    ``cfg`` is a :class:`..functions.sketch.SketchConfig`; ``fields`` is a
+    subset of its column names in output order (minimizers / positions as
+    lists of per-doc int64 / int32 arrays, minhash as a list of per-doc int64
+    arrays, n_shingles / n_dups / simhash as int64 arrays).  Only the
+    components ``fields`` needs run: the winnow for minimizers / positions,
+    the segment-distinct pass for n_dups, simhash and seeded MinHash.
+    ``seeds`` is ``cfg.seeds()``, computed here when seeded MinHash needs it
+    and the caller did not pass it.
+
+    Text and DNA mode differ only in the fingerprint step (see
+    :func:`_chunk_fingerprints`); the batch is processed in
+    ~``chunk_bytes``-of-text document groups (cache residency — see
+    ``_CHUNK_TEXT_BYTES``).
     """
-    bufs = [(t or "").encode("utf-8") for t in texts]
-    n_all = len(bufs)
-    if n_all == 0:
-        out = {"minimizers": []}
-        if include_positions:
-            out["positions"] = []
-        out.update(n_shingles=_EMPTY_I64, n_dups=_EMPTY_I64,
-                   minhash=[], simhash=_EMPTY_I64)
-        return out
-    parts = []
-    lo = 0
-    while lo < n_all:
-        hi, acc = lo, 0
-        while hi < n_all and (acc == 0 or acc + len(bufs[hi]) <= chunk_bytes):
-            acc += len(bufs[hi])
-            hi += 1
-        parts.append(_sketch_text_chunk(
-            bufs[lo:hi], k, w, hash_type, hash_seed, minhash_scheme,
-            num_perm, seeds, simhash_seed, simhash_hash_type,
-            include_positions,
-        ))
-        lo = hi
-    if len(parts) == 1:
-        return parts[0]
-    out = {key: ([] if isinstance(parts[0][key], list) else None)
-           for key in parts[0]}
-    for key in out:
-        if isinstance(parts[0][key], list):
-            for p in parts:
-                out[key].extend(p[key])
-        else:
-            out[key] = np.concatenate([p[key] for p in parts])
-    return out
+    if seeds is None and "minhash" in fields and cfg.minhash_scheme == "seeded":
+        seeds = cfg.seeds()
+    if cfg.mode == "text":
+        docs = [(t or "").encode("utf-8") for t in texts]
+    else:
+        docs = [t or "" for t in texts]
+    cols = {f: [] for f in fields}
+    for lo, hi in _chunk_bufs(docs, chunk_bytes):
+        # one call per chunk, so a chunk's intermediates are freed before
+        # the next chunk allocates its own: peak memory and cache footprint
+        # stay at one chunk
+        _sketch_chunk(docs[lo:hi], cfg, seeds, cols)
+    for f in ("n_shingles", "n_dups", "simhash"):
+        if f in cols:
+            cols[f] = np.concatenate(cols[f]) if cols[f] else _EMPTY_I64
+    return cols
 
 
-def _sketch_text_chunk(
-    bufs,
-    k: int,
-    w: int,
-    hash_type: str,
-    hash_seed: int,
-    minhash_scheme: str,
-    num_perm: int,
-    seeds: np.ndarray | None,
-    simhash_seed: int,
-    simhash_hash_type: str,
-    include_positions: bool,
-) -> dict:
-    """One cache-resident document group of :func:`batch_full_sketch_text`
-    (``bufs`` are pre-encoded utf-8 byte strings)."""
-    lens = np.fromiter((len(b) for b in bufs), dtype=np.int64, count=len(bufs))
-    data = np.frombuffer(b"".join(bufs), dtype=np.uint8)
-    n_docs = lens.shape[0]
-    fp_all, n_sh, seg = batch_shingle_fingerprints(data, lens, k)
+def _sketch_chunk(docs, cfg, seeds: np.ndarray | None, cols: dict) -> None:
+    """Append the ``cols`` columns of one cache-resident document group."""
+    n_docs = len(docs)
+    seeded = "minhash" in cols and cfg.minhash_scheme == "seeded"
+    # DNA sentinel k-mers keep the raw sentinel instead of a hash (as
+    # kernels.hash_dna_sequence does), so a hashed k-mer can collide with
+    # them: #distinct hashes != #distinct fingerprints, n_dups needs a sort
+    sentinel = cfg.mode == "dna" and cfg.on_invalid == "sentinel"
+    fp_all, n_sh, seg = _chunk_fingerprints(docs, cfg)
     if fp_all.shape[0]:
-        h_all = K.apply_hash(hash_type, hash_seed, fp_all, 32)
+        h_all = K.apply_hash(cfg.hash_type, cfg.hash_seed, fp_all, cfg.mask_k)
+        if sentinel:
+            h_all[fp_all == K.SENTINEL] = K.SENTINEL
     else:
         h_all = _EMPTY_U64
-    mini_v, mini_p, mini_counts = batch_winnow(h_all, seg, n_docs, w)
-    n_dups, ufp, useg = _segment_distinct(fp_all, h_all, seg, n_docs, hash_type, n_sh)
-    if minhash_scheme == "oph":
-        sig = batch_oph(h_all, seg, n_docs, num_perm)
-    else:
-        assert seeds is not None
-        sig = batch_seeded_minhash(ufp, useg, n_docs, seeds, hash_type)
-    # SimHash uses its own seed over the same distinct fingerprints
-    if ufp.shape[0]:
-        uh_sim = K.apply_hash(simhash_hash_type, simhash_seed, ufp, 32)
-    else:
-        uh_sim = _EMPTY_U64
-    sims = batch_simhash(uh_sim, useg, n_docs)
-
-    bounds = np.cumsum(mini_counts)[:-1]
-    minis = np.split(K.u64_to_i64(mini_v), bounds)
-    out = {"minimizers": minis}
-    if include_positions:
-        out["positions"] = np.split(mini_p.astype(np.int32), bounds)
-    out["n_shingles"] = n_sh.astype(np.int64)
-    out["n_dups"] = np.asarray(n_dups, dtype=np.int64)
-    out["minhash"] = list(K.u64_to_i64(sig.reshape(n_docs, -1)))
-    out["simhash"] = sims
-    return out
+    if "n_shingles" in cols:
+        cols["n_shingles"].append(n_sh)
+    if "minimizers" in cols or "positions" in cols:
+        mini_v, mini_p, mini_counts = batch_winnow(h_all, seg, n_docs, cfg.w)
+        bounds = np.cumsum(mini_counts)[:-1]
+        if "minimizers" in cols:
+            cols["minimizers"].extend(np.split(K.u64_to_i64(mini_v), bounds))
+        if "positions" in cols:
+            cols["positions"].extend(np.split(mini_p.astype(np.int32), bounds))
+    if seeded or "n_dups" in cols or "simhash" in cols:
+        # the sort only when n_dups is kept (signature-only calls drop it)
+        dups_by_sort = "n_dups" in cols and (
+            sentinel or not K.hash_is_invertible(cfg.hash_type))
+        n_dups, ufp, useg = _segment_distinct(fp_all, h_all, seg, n_docs, dups_by_sort, n_sh)
+        if "n_dups" in cols:
+            cols["n_dups"].append(n_dups)
+    if "minhash" in cols:
+        if seeded:
+            sig = batch_seeded_minhash(ufp, useg, n_docs, seeds, cfg.hash_type)
+        else:
+            # OPH hashes the fingerprints in the full 64-bit domain: the
+            # position hashes already are that, except in DNA mode below
+            # k=32 or with raw sentinels
+            h64 = h_all if cfg.mask_k == 32 and not sentinel else K.apply_hash(
+                cfg.hash_type, cfg.hash_seed, fp_all, 32)
+            sig = batch_oph(h64, seg, n_docs, cfg.num_perm)
+        cols["minhash"].extend(K.u64_to_i64(sig.reshape(n_docs, -1)))
+    if "simhash" in cols:
+        # SimHash uses its own seed over the same distinct fingerprints
+        if ufp.shape[0]:
+            uh_sim = K.apply_hash(cfg.hash_type, cfg.simhash_seed, ufp, 32)
+        else:
+            uh_sim = _EMPTY_U64
+        cols["simhash"].append(batch_simhash(uh_sim, useg, n_docs))
 
 
 def _chunk_bufs(bufs, chunk_bytes: int):
@@ -427,91 +410,32 @@ def _chunk_bufs(bufs, chunk_bytes: int):
         lo = hi
 
 
-def batch_signature_text(
-    texts,
-    k: int,
-    hash_type: str,
-    hash_seed: int,
-    minhash_scheme: str,
-    num_perm: int,
-    seeds: np.ndarray | None,
-    simhash_seed: int,
-    simhash_hash_type: str,
-    chunk_bytes: int = _CHUNK_TEXT_BYTES,
-) -> dict:
-    """Signature-only batch kernel (r06): MinHash + SimHash of one Arrow
-    batch with no per-document Python and WITHOUT the winnow/n_dups work the
-    full sketch also pays — the signature UDF (``add_signature``) previously
-    looped per document (~the r04 cost floor the full sketch already
-    escaped).  Same segmented component kernels, so bit-parity with the
-    per-document path follows from the pinned batch-parity contract (and is
-    pinned again in tests/test_kernels.py)."""
-    bufs = [(t or "").encode("utf-8") for t in texts]
-    if not bufs:
-        return {"minhash": [], "simhash": _EMPTY_I64}
-    sigs: list = []
-    sims: list = []
-    for lo, hi in _chunk_bufs(bufs, chunk_bytes):
-        part = bufs[lo:hi]
-        lens = np.fromiter((len(b) for b in part), dtype=np.int64, count=len(part))
-        data = np.frombuffer(b"".join(part), dtype=np.uint8)
-        n_docs = lens.shape[0]
-        fp_all, n_sh, seg = batch_shingle_fingerprints(data, lens, k)
-        if fp_all.shape[0]:
-            h_all = K.apply_hash(hash_type, hash_seed, fp_all, 32)
-        else:
-            h_all = _EMPTY_U64
-        _, ufp, useg = _segment_distinct(fp_all, h_all, seg, n_docs, hash_type, n_sh)
-        if minhash_scheme == "oph":
-            sig = batch_oph(h_all, seg, n_docs, num_perm)
-        else:
-            assert seeds is not None
-            sig = batch_seeded_minhash(ufp, useg, n_docs, seeds, hash_type)
-        if ufp.shape[0]:
-            uh_sim = K.apply_hash(simhash_hash_type, simhash_seed, ufp, 32)
-        else:
-            uh_sim = _EMPTY_U64
-        sigs.extend(K.u64_to_i64(sig.reshape(n_docs, -1)))
-        sims.append(batch_simhash(uh_sim, useg, n_docs))
-    return {"minhash": sigs, "simhash": np.concatenate(sims)}
+def _chunk_fingerprints(docs, cfg) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(fp_all, n_shingles, seg) of one document group — the only step that
+    differs by mode.  Text: one segmented shingle pass over the utf-8 bytes
+    ``docs``.  DNA: ``cfg.fingerprints`` per sequence string (2-bit packing,
+    canonical or not, with its per-sequence raise/sentinel rule), then
+    concatenated."""
+    if cfg.mode == "text":
+        lens = np.fromiter((len(b) for b in docs), dtype=np.int64, count=len(docs))
+        data = np.frombuffer(b"".join(docs), dtype=np.uint8)
+        return batch_shingle_fingerprints(data, lens, cfg.k)
+    fps = [cfg.fingerprints(d) for d in docs]
+    n_sh = np.fromiter((f.shape[0] for f in fps), dtype=np.int64, count=len(fps))
+    seg = np.repeat(np.arange(len(fps), dtype=np.int64), n_sh)
+    return np.concatenate(fps), n_sh, seg
 
 
-def batch_sketch_text(
-    texts,
-    k: int,
-    w: int,
-    hash_type: str,
-    hash_seed: int,
-    chunk_bytes: int = _CHUNK_TEXT_BYTES,
-) -> dict:
-    """Sketch-only batch kernel (r06): winnowed minimizers + positions +
-    n_shingles + n_dups of one Arrow batch without the MinHash/SimHash work
-    — the ``add_sketch`` twin of :func:`batch_signature_text`."""
-    bufs = [(t or "").encode("utf-8") for t in texts]
-    if not bufs:
-        return {"minimizers": [], "positions": [],
-                "n_shingles": _EMPTY_I64, "n_dups": _EMPTY_I64}
-    minis: list = []
-    poss: list = []
-    n_shs: list = []
-    n_dups_all: list = []
-    for lo, hi in _chunk_bufs(bufs, chunk_bytes):
-        part = bufs[lo:hi]
-        lens = np.fromiter((len(b) for b in part), dtype=np.int64, count=len(part))
-        data = np.frombuffer(b"".join(part), dtype=np.uint8)
-        n_docs = lens.shape[0]
-        fp_all, n_sh, seg = batch_shingle_fingerprints(data, lens, k)
-        if fp_all.shape[0]:
-            h_all = K.apply_hash(hash_type, hash_seed, fp_all, 32)
-        else:
-            h_all = _EMPTY_U64
-        mini_v, mini_p, mini_counts = batch_winnow(h_all, seg, n_docs, w)
-        n_dups, _, _ = _segment_distinct(fp_all, h_all, seg, n_docs, hash_type, n_sh)
-        bounds = np.cumsum(mini_counts)[:-1]
-        minis.extend(np.split(K.u64_to_i64(mini_v), bounds))
-        poss.extend(np.split(mini_p.astype(np.int32), bounds))
-        n_shs.append(n_sh.astype(np.int64))
-        n_dups_all.append(np.asarray(n_dups, dtype=np.int64))
-    return {"minimizers": minis, "positions": poss,
-            "n_shingles": np.concatenate(n_shs),
-            "n_dups": np.concatenate(n_dups_all)}
+# positional signature kept because perfbench/tracing.py calls it
+def batch_full_sketch_text(texts, k, w, hash_type, hash_seed, minhash_scheme, num_perm, seeds,
+                           simhash_seed, simhash_hash_type, include_positions,
+                           chunk_bytes=_CHUNK_TEXT_BYTES) -> dict:
+    """Text-mode :func:`batch_sketch` of the ``add_full_sketch`` columns."""
+    from .functions.sketch import SketchConfig, full_sketch_fields
+
+    if simhash_hash_type != hash_type:
+        raise ValueError("SimHash uses the sketch's own hash_type")
+    cfg = SketchConfig(k=k, w=w, hash_type=hash_type, hash_seed=hash_seed,
+                       minhash_scheme=minhash_scheme, num_perm=num_perm,
+                       simhash_seed=simhash_seed, include_positions=include_positions)
+    return batch_sketch(texts, cfg, full_sketch_fields(cfg), seeds, chunk_bytes)

@@ -73,7 +73,7 @@ def _score_pair(name_a: str, text_a: str, name_b: str, text_b: str,
     fp_a = cfg.fingerprints(text_a or "")
     fp_b = cfg.fingerprints(text_b or "")
     kd = P.jaccard_exact(fp_a, fp_b)
-    mask_k = cfg.k if cfg.mode == "dna" else 32
+    mask_k = cfg.mask_k
 
     # replicate-0 hash sequences are needed by BOTH report_duplicates and the
     # correction branch; compute them at most once per pair
@@ -231,7 +231,7 @@ def config_report(pairs: DataFrame, cfg: SketchConfig, sparse: bool = True) -> D
     such pairs before printing.
     """
     seeds = cfg.seeds()
-    mask_k = cfg.k if cfg.mode == "dna" else 32
+    mask_k = cfg.mask_k
     if not K.hash_is_invertible(cfg.hash_type):
         raise ValueError(
             "config counts need an invertible, duplicate-free hash "
@@ -321,7 +321,7 @@ def check_duplicates(docs: DataFrame, cfg: SketchConfig,
         ]
     )
     seeds = cfg.seeds()
-    mask_k = cfg.k if cfg.mode == "dna" else 32
+    mask_k = cfg.mask_k
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -341,7 +341,7 @@ def replicate_report(pairs: DataFrame, cfg: SketchConfig) -> DataFrame:
     """Per-replicate rows (reference ``--report:replicates``): one row per
     (pair, replicate) with that replicate's hash seed and Ihat/Uhat/Jhat."""
     seeds = cfg.seeds()
-    mask_k = cfg.k if cfg.mode == "dna" else 32
+    mask_k = cfg.mask_k
 
     schema = StructType(
         [

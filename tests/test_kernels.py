@@ -442,37 +442,82 @@ def _batch_corpus(rng: random.Random, n: int) -> list:
     return docs
 
 
-@pytest.mark.parametrize("hash_type", ["splitmix64", "minimap2", "murmurhash3"])
-@pytest.mark.parametrize("scheme", ["oph", "seeded"])
-def test_batch_full_sketch_bit_parity(hash_type, scheme):
+FIELD_SETS = {
+    "full": ("minimizers", "positions", "n_shingles", "n_dups", "minhash", "simhash"),
+    "sketch": ("minimizers", "positions", "n_shingles", "n_dups"),
+    "signature": ("minhash", "simhash"),
+}
+
+
+def _assert_batch_matches_per_document(got, docs, cfg, fields):
+    """Every column of a ``batch_sketch`` result equals the per-document
+    kernels: ``cfg.hash_sequence`` (hash_text_shingles / hash_dna_sequence),
+    winnow_minimizers, count_hash_duplicates, ``cfg.minhash`` and simhash64."""
+    assert tuple(got) == tuple(fields)
+    for col in got.values():
+        assert len(col) == len(docs)
+    seeds = cfg.seeds()
+    for i, t in enumerate(docs):
+        t = t or ""
+        fp = cfg.fingerprints(t)
+        h = cfg.hash_sequence(t)
+        v, p = K.winnow_minimizers(h, cfg.w)
+        if "minimizers" in got:
+            assert np.array_equal(K.i64_to_u64(got["minimizers"][i]), v), (i, t[:40])
+        if "positions" in got:
+            assert np.array_equal(got["positions"][i], p.astype(np.int32)), i
+            assert got["positions"][i].dtype == np.int32
+        if "n_shingles" in got:
+            assert got["n_shingles"][i] == h.shape[0], i
+        if "n_dups" in got:
+            assert got["n_dups"][i] == K.count_hash_duplicates(h), i
+        if "minhash" in got:
+            sig = cfg.minhash(fp, seeds)
+            assert np.array_equal(K.i64_to_u64(got["minhash"][i]), sig), i
+        if "simhash" in got:
+            sh = K.simhash64(fp, cfg.simhash_seed, cfg.hash_type)
+            want = sh - (1 << 64) if sh >= (1 << 63) else sh
+            assert int(got["simhash"][i]) == want, i
+
+
+def _check_batch_field_set(hash_type, scheme, fields):
+    """Text-mode batch_sketch with ``fields`` == the per-document kernels
+    over the adversarial corpus, in one chunk and in many; an empty batch
+    yields every requested column, empty."""
     from minimizer_jaccard_estimator_spark import kernels_batch as KB
     from minimizer_jaccard_estimator_spark.functions.sketch import SketchConfig
 
-    rng = random.Random(hash(("batch", hash_type, scheme)) & 0xFFFF)
-    docs = _batch_corpus(rng, 60)
+    docs = _batch_corpus(random.Random(f"batch-{hash_type}-{scheme}"), 60)
     num_perm = 16 if scheme == "seeded" else 32
     cfg = SketchConfig(k=12, w=20, hash_type=hash_type, hash_seed=7,
                        num_perm=num_perm, lsh_bands=8, minhash_scheme=scheme)
-    seeds = cfg.seeds()
-    got = KB.batch_full_sketch_text(
-        docs, cfg.k, cfg.w, cfg.hash_type, cfg.hash_seed, scheme,
-        cfg.num_perm, seeds if scheme != "oph" else None,
-        cfg.simhash_seed, cfg.hash_type, True,
-    )
-    for i, t in enumerate(docs):
-        t = t or ""
-        fp = K.shingle_fingerprints(t, cfg.k)
-        h = K.apply_hash(cfg.hash_type, cfg.hash_seed, fp, 32) if fp.size else fp
-        v, p = K.winnow_minimizers(h, cfg.w)
-        assert np.array_equal(K.i64_to_u64(got["minimizers"][i]), v), (i, t[:40])
-        assert np.array_equal(got["positions"][i], p.astype(np.int32)), i
-        assert got["n_shingles"][i] == h.shape[0], i
-        assert got["n_dups"][i] == K.count_hash_duplicates(h), i
-        sig = cfg.minhash(fp, seeds)
-        assert np.array_equal(K.i64_to_u64(got["minhash"][i]), sig), (i, scheme)
-        sh = K.simhash64(fp, cfg.simhash_seed, cfg.hash_type)
-        want = sh - (1 << 64) if sh >= (1 << 63) else sh
-        assert int(got["simhash"][i]) == want, i
+    for chunk in (1 << 30, 128):
+        got = KB.batch_sketch(docs, cfg, fields, chunk_bytes=chunk)
+        _assert_batch_matches_per_document(got, docs, cfg, fields)
+    empty = KB.batch_sketch([], cfg, fields)
+    assert tuple(empty) == fields
+    assert all(len(col) == 0 for col in empty.values())
+
+
+@pytest.mark.parametrize("hash_type", ["splitmix64", "minimap2", "murmurhash3"])
+@pytest.mark.parametrize("scheme", ["oph", "seeded"])
+def test_batch_full_sketch_bit_parity(hash_type, scheme):
+    """The full-sketch field set (every column sketch_text returns)."""
+    _check_batch_field_set(hash_type, scheme, FIELD_SETS["full"])
+
+
+@pytest.mark.parametrize("hash_type", ["splitmix64", "minimap2", "murmurhash3"])
+@pytest.mark.parametrize("scheme", ["oph", "seeded"])
+def test_batch_signature_text_bit_parity(hash_type, scheme):
+    """The signature-only field set (minhash and simhash, no winnowing)."""
+    _check_batch_field_set(hash_type, scheme, FIELD_SETS["signature"])
+
+
+@pytest.mark.parametrize("hash_type", ["splitmix64", "murmurhash3"])
+def test_batch_sketch_text_bit_parity(hash_type):
+    """The sketch-only field set (minimizers, positions and counts, no
+    MinHash or SimHash)."""
+    _check_batch_field_set(hash_type, "oph", FIELD_SETS["sketch"])
 
 
 def test_batch_full_sketch_num_perm_one_and_empty_batch():
@@ -490,6 +535,9 @@ def test_batch_full_sketch_num_perm_one_and_empty_batch():
                                       None, 0, "splitmix64", True)
     assert empty["minimizers"] == [] and empty["minhash"] == []
     assert empty["n_shingles"].shape == (0,)
+    with pytest.raises(ValueError, match="SimHash"):
+        KB.batch_full_sketch_text([], 4, 3, "splitmix64", 0, "oph", 8,
+                                  None, 0, "minimap2", True)
 
 
 def test_batch_simhash_large_segment_chunking():
@@ -536,57 +584,132 @@ def test_batch_full_sketch_chunking_is_invisible():
         assert np.array_equal(one[key], many[key]), key
 
 
-@pytest.mark.parametrize("hash_type", ["splitmix64", "minimap2", "murmurhash3"])
-@pytest.mark.parametrize("scheme", ["oph", "seeded"])
-def test_batch_signature_text_bit_parity(hash_type, scheme):
-    """batch_signature_text (r06 signature-only kernel) == the per-document
-    signature path over the adversarial corpus, incl. chunk invisibility."""
+def _splitmix64_preimage(seed: int, target: int) -> int:
+    """The v with ``splitmix64_hash(seed, v) == target`` (the hash is a
+    bijection; each step is inverted, including the carry quirk)."""
+    M = (1 << 64) - 1
+
+    def unxorshift(x, s):
+        y = x
+        for _ in range(64 // s + 1):
+            y = x ^ (y >> s)
+        return y
+
+    s = (seed ^ 0x3243F6A8885A308D) & M
+    u = unxorshift(target, 31) * pow(0x94D049BB133111EB, -1, 1 << 64) & M
+    u = unxorshift((u - (s >> 5)) & M, 27) * pow(0xBF58476D1CE4E5B9, -1, 1 << 64) & M
+    for carry in (0, 1):
+        u1 = unxorshift(u ^ (carry << 34), 30)
+        v = (u1 - s) & M
+        if (v + s > M) == bool(carry):
+            return v
+    raise AssertionError("no preimage")
+
+
+def _dna_corpus(rng: random.Random, k: int, w: int, hash_type: str, seed: int,
+                sentinel: bool) -> list:
+    """DNA sequences: empty, None, shorter than k, shorter than w k-mers,
+    repeats, all-T (at k=32 the all-T k-mer packs to the sentinel value),
+    an exact duplicate and random sequences; with ``sentinel`` also N's,
+    lowercase and a 32-mer whose splitmix64 hash IS the sentinel."""
+    docs = ["", None, "ACG", random_dna(rng, k + w - 2), "ACGT" * 30,
+            "A" * (k + 2 * w), "T" * (k + w + 3), "GATTACA" * 9]
+    docs += [random_dna(rng, rng.randint(k, 200)) for _ in range(6)]
+    docs.append(docs[-1])
+    if sentinel:
+        docs += ["AN", "ACGTNACGTACGTACGTNNNACGTACGTACGTACGTACGTAC" * 2,
+                 "acgtACGTacgt" * 6, random_dna(rng, 40) + "N" + random_dna(rng, 40)]
+        if hash_type == "splitmix64" and k == 32:
+            x = _splitmix64_preimage(seed, (1 << 64) - 1)
+            assert K.splitmix64_hash(seed, np.array([x], dtype=np.uint64))[0] == K.SENTINEL
+            kmer = "".join("ACGT"[(x >> (2 * (31 - j))) & 3] for j in range(32))
+            docs.append(kmer + "N")  # a hashed k-mer equal to a raw sentinel
+    return docs
+
+
+@pytest.mark.parametrize("hash_type", ["minimap2", "splitmix64", "murmurhash3"])
+@pytest.mark.parametrize("canonical", [False, True])
+@pytest.mark.parametrize("on_invalid", ["raise", "sentinel"])
+@pytest.mark.parametrize("k", [4, 32])
+def test_batch_sketch_dna_bit_parity(hash_type, canonical, on_invalid, k):
+    """DNA-mode batch_sketch == the per-document kernels (hash_dna_sequence
+    and the rest), for both MinHash schemes, in one chunk and in many; with
+    on_invalid='raise' a non-ACGT sequence raises the same ValueError."""
     from minimizer_jaccard_estimator_spark import kernels_batch as KB
     from minimizer_jaccard_estimator_spark.functions.sketch import SketchConfig
 
-    rng = random.Random(hash(("sig", hash_type, scheme)) & 0xFFFF)
-    docs = _batch_corpus(rng, 60)
-    num_perm = 16 if scheme == "seeded" else 32
-    cfg = SketchConfig(k=12, w=20, hash_type=hash_type, hash_seed=7,
-                       num_perm=num_perm, lsh_bands=8, minhash_scheme=scheme)
-    seeds = cfg.seeds()
-    for chunk in (1 << 30, 128):
-        got = KB.batch_signature_text(
-            docs, cfg.k, cfg.hash_type, cfg.hash_seed, scheme, cfg.num_perm,
-            seeds if scheme != "oph" else None, cfg.simhash_seed,
-            cfg.hash_type, chunk_bytes=chunk,
-        )
-        for i, t in enumerate(docs):
-            t = t or ""
-            fp = K.shingle_fingerprints(t, cfg.k)
-            sig = cfg.minhash(fp, seeds)
-            assert np.array_equal(K.i64_to_u64(got["minhash"][i]), sig), (i, chunk)
-            sh = K.simhash64(fp, cfg.simhash_seed, cfg.hash_type)
-            want = sh - (1 << 64) if sh >= (1 << 63) else sh
-            assert int(got["simhash"][i]) == want, (i, chunk)
-    assert KB.batch_signature_text([], 4, "splitmix64", 0, "oph", 8, None,
-                                   0, "splitmix64") == {
-        "minhash": [], "simhash": KB._EMPTY_I64}
+    seed = 11
+    docs = _dna_corpus(random.Random(f"dna-{hash_type}-{canonical}-{on_invalid}-{k}"),
+                       k, 5, hash_type, seed, on_invalid == "sentinel")
+    fields = FIELD_SETS["full"]
+    for scheme in ("oph", "seeded"):
+        cfg = SketchConfig(k=k, w=5, hash_type=hash_type, hash_seed=seed, mode="dna",
+                           canonical=canonical, on_invalid=on_invalid, num_perm=16,
+                           lsh_bands=8, minhash_scheme=scheme)
+        for chunk in (1 << 30, 64):
+            got = KB.batch_sketch(docs, cfg, fields, chunk_bytes=chunk)
+            _assert_batch_matches_per_document(got, docs, cfg, fields)
+    if on_invalid == "raise":
+        bad = docs[5] + "N" + docs[4]
+        with pytest.raises(ValueError) as want:
+            K.hash_dna_sequence(bad, k, hash_type, seed, canonical=canonical)
+        with pytest.raises(ValueError) as got_err:
+            KB.batch_sketch(docs[:6] + [bad], cfg, fields)
+        assert str(got_err.value) == str(want.value)
 
 
-@pytest.mark.parametrize("hash_type", ["splitmix64", "murmurhash3"])
-def test_batch_sketch_text_bit_parity(hash_type):
-    """batch_sketch_text (r06 sketch-only kernel) == the per-document
-    winnow/n_dups path over the adversarial corpus, incl. chunk
-    invisibility."""
-    from minimizer_jaccard_estimator_spark import kernels_batch as KB
+@pytest.mark.parametrize("field,value", [
+    ("mode", "DNA"), ("minhash_scheme", "OPH"), ("on_invalid", "skip"),
+    ("hash_type", "xxhash"),
+])
+def test_sketch_config_rejects_unknown_values(field, value):
+    from minimizer_jaccard_estimator_spark.functions.sketch import SketchConfig
 
-    rng = random.Random(hash(("sk", hash_type)) & 0xFFFF)
-    docs = _batch_corpus(rng, 60)
-    k, w, seed = 12, 20, 7
-    for chunk in (1 << 30, 128):
-        got = KB.batch_sketch_text(docs, k, w, hash_type, seed,
-                                   chunk_bytes=chunk)
-        for i, t in enumerate(docs):
-            t = t or ""
-            h = K.hash_text_shingles(t, k, hash_type, seed)
-            v, p = K.winnow_minimizers(h, w)
-            assert np.array_equal(K.i64_to_u64(got["minimizers"][i]), v), (i, chunk)
-            assert np.array_equal(got["positions"][i], p.astype(np.int32)), i
-            assert got["n_shingles"][i] == h.shape[0], i
-            assert got["n_dups"][i] == K.count_hash_duplicates(h), i
+    with pytest.raises(ValueError, match=field):
+        SketchConfig(**{field: value})
+
+
+# ---------------------------------------------------------------------------
+# golden vectors (tests/golden_vectors.json, captured from the kernels before
+# the sketch layer became one batch path; see test_pipeline for the
+# add_full_sketch columns)
+# ---------------------------------------------------------------------------
+
+@pytest.fixture(scope="module")
+def golden():
+    import json
+    import os
+
+    with open(os.path.join(os.path.dirname(__file__), "golden_vectors.json")) as f:
+        return json.load(f)
+
+
+def test_golden_apply_hash_and_winnow(golden):
+    g = golden["apply_hash"]
+    v = np.array(g["inputs"], dtype=np.uint64)
+    for case in g["cases"]:
+        out = K.apply_hash(case["hash_type"], case["seed"], v, case["k"])
+        assert [int(x) for x in out] == case["out"], case["hash_type"]
+    g = golden["winnow_minimizers"]
+    for case in g["cases"]:
+        vals, pos = K.winnow_minimizers(np.array(g["hashes"], dtype=np.uint64), case["w"])
+        assert [int(x) for x in vals] == case["values"], case["w"]
+        assert [int(x) for x in pos] == case["positions"], case["w"]
+
+
+def test_golden_signatures(golden):
+    from minimizer_jaccard_estimator_spark.functions.sketch import SketchConfig
+
+    g = golden["signatures"]
+    for case in g["cases"]:
+        ht = case["hash_type"]
+        cfg = SketchConfig(k=g["k"], hash_type=ht, hash_seed=g["hash_seed"],
+                           num_perm=g["num_perm"], prng_seed=g["prng_seed"])
+        fp = K.shingle_fingerprints(g["text"], cfg.k)
+        seeds = cfg.seeds()
+        assert [int(x) for x in seeds] == case["seeds"], ht
+        oph = K.oph_signature(fp, cfg.num_perm, ht, cfg.hash_seed)
+        assert [int(x) for x in oph] == case["oph"], ht
+        mh = K.minhash_signature(fp, seeds, hash_type=ht)
+        assert [int(x) for x in mh] == case["minhash"], ht
+        assert K.simhash64(fp, g["simhash_seed"], ht) == case["simhash"], ht

@@ -255,20 +255,61 @@ def test_full_sketch_udf_equals_composed(spark):
         [(str(i), f"token{i} alpha beta gamma delta {'x' * (i % 7)} end") for i in range(25)],
         ["conv_id", "text"],
     )
+    dna = spark.createDataFrame(
+        [(str(i), s) for i, s in enumerate(
+            ["", "ACG", "ACGTNACGTTGCA" * 3, "GATTACA" * 5, "acgtAACCGGTT" * 2,
+             "TTTTTTTTTTTT", "ACGTACGTNNACGTAC"])],
+        ["conv_id", "text"],
+    )
     # minimap2 is the regression case: text mode must hash with the full
-    # 64-bit mask (k=32), not cfg.k
-    for ht in ("splitmix64", "minimap2", "murmurhash3"):
-        cfg = SketchConfig(k=6, w=5, num_perm=16, lsh_bands=8, hash_type=ht)
-        full = {r["conv_id"]: r for r in add_full_sketch(docs, cfg).collect()}
+    # 64-bit mask (k=32), not cfg.k; the DNA config runs the same batch path
+    # with k-mer packing, mask k and sentinels
+    configs = [(docs, SketchConfig(k=6, w=5, num_perm=16, lsh_bands=8, hash_type=ht))
+               for ht in ("splitmix64", "minimap2", "murmurhash3")]
+    configs.append((dna, SketchConfig(k=5, w=3, num_perm=16, lsh_bands=8, mode="dna",
+                                      hash_type="minimap2", canonical=True,
+                                      on_invalid="sentinel", minhash_scheme="oph")))
+    for frame, cfg in configs:
+        ht = cfg.hash_type
+        full = {r["conv_id"]: r for r in add_full_sketch(frame, cfg).collect()}
         composed = {
             r["conv_id"]: r
-            for r in add_signature(add_sketch(docs, cfg), cfg).collect()
+            for r in add_signature(add_sketch(frame, cfg), cfg).collect()
         }
         assert full.keys() == composed.keys()
         for cid, fr in full.items():
             cr = composed[cid]
             for col in ("minimizers", "positions", "n_shingles", "n_dups", "minhash", "simhash"):
                 assert fr[col] == cr[col], (ht, cid, col)
+
+
+def test_add_full_sketch_golden_vectors(spark):
+    """add_full_sketch's column dict on a fixed 6-document corpus (empty,
+    shorter than k, unicode, an exact duplicate) for every hash type x
+    MinHash scheme == tests/golden_vectors.json, captured before the sketch
+    layer became one batch path."""
+    import json
+    import os
+
+    from minimizer_jaccard_estimator_spark.functions.sketch import (
+        SketchConfig,
+        add_full_sketch,
+    )
+
+    with open(os.path.join(os.path.dirname(__file__), "golden_vectors.json")) as f:
+        g = json.load(f)["add_full_sketch"]
+    docs = spark.createDataFrame(list(map(list, enumerate(g["docs"]))), ["conv_id", "text"])
+    for case in g["cases"]:
+        cfg = SketchConfig(k=g["k"], w=g["w"], hash_type=case["hash_type"],
+                           hash_seed=g["hash_seed"], num_perm=g["num_perm"],
+                           lsh_bands=g["lsh_bands"], minhash_scheme=case["scheme"])
+        out = add_full_sketch(docs, cfg)
+        cols = list(case["columns"])
+        assert out.columns == ["conv_id", "text"] + cols
+        rows = sorted(out.collect(), key=lambda r: r["conv_id"])
+        for c in cols:
+            assert [r[c] for r in rows] == case["columns"][c], (
+                case["hash_type"], case["scheme"], c)
 
 
 def test_dedup_recall_with_oph_candidates(spark):
