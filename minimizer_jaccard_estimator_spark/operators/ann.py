@@ -120,6 +120,7 @@ def embedding_neardup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int | None = None,
+    cache_registry: list | None = None,
 ) -> DataFrame:
     """Near-duplicate embedding pairs (id_a < id_b, cosine >= threshold)
     WITHOUT an all-pairs join — the scale path the crossJoin oracle verifies.
@@ -138,6 +139,10 @@ def embedding_neardup_pairs(
     deterministic, and robust to a corrupt leading row, unlike probing the
     (partition-order-dependent) first row.  Pass ``dim`` explicitly when
     the table's dimension is known.
+
+    The persisted unit-vector table is appended to ``cache_registry`` when
+    given, for the caller to unpersist once the pairs are consumed; without
+    a registry it stays cached for the session.
     """
     if dim is None:
         sizes = (
@@ -169,9 +174,11 @@ def embedding_neardup_pairs(
     # lineage below it — for media features that is the per-row extraction
     # UDF, re-executed per consumer (r06, guide §5 "reused AND expensive to
     # recompute"; measured media_neardup 8.6 -> 2.9 s at sf0.1).  Narrow
-    # (id, unit-vector) rows, MEMORY_AND_DISK; cached for the session on
-    # the one-shot query path, same contract as substring_candidate_pairs.
+    # (id, unit-vector) rows, MEMORY_AND_DISK; released through
+    # cache_registry, same contract as substring_candidate_pairs.
     unit = unit.persist()
+    if cache_registry is not None:
+        cache_registry.append(unit)
     keys = _hyperplane_bucket_udf(dim, n_planes, n_tables, seed)(F.col("_u"))
     b = unit.select(id_col, F.explode(keys).alias("bucket"))
 

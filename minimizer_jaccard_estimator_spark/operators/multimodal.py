@@ -171,6 +171,7 @@ def media_neardup_pairs(
     n_tables: int = 8,
     seed: int = 42,
     dim: int | None = None,
+    cache_registry: list | None = None,
 ) -> DataFrame:
     """Near-dup media pairs (id_a < id_b) by feature cosine >= threshold.
 
@@ -185,6 +186,8 @@ def media_neardup_pairs(
     Pass ``dim`` when the feature dimension is known (extract_features'
     ``dim`` argument) — it skips the modal-size inference pass, an extra
     Spark job over potentially expensive lineage (ADVICE r03).
+    ``cache_registry`` collects the persisted feature table for release, as
+    in :func:`.ann.embedding_neardup_pairs`.
     """
     from .ann import embedding_neardup_pairs
 
@@ -198,6 +201,7 @@ def media_neardup_pairs(
         id_col="media_id",
         vec_col="features",
         dim=dim,
+        cache_registry=cache_registry,
     )
 
 

@@ -10,7 +10,24 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+WORKER_DAEMON = "minimizer_jaccard_estimator_spark.plans.worker_daemon"
+
+
+def _jvm_pythonpath_has(path: str) -> bool:
+    """Whether the JVM that starts the Python daemon has ``path`` on its
+    PYTHONPATH: the running JVM's own environment, or this process's when
+    this session launches the JVM.  A JVM started by spark-submit is not
+    checked (its environment is not readable before the session exists)."""
+    if SparkContext._jvm is not None:
+        env = SparkContext._jvm.java.lang.System.getenv("PYTHONPATH") or ""
+    elif "PYSPARK_GATEWAY_PORT" in os.environ:
+        return False
+    else:
+        env = os.environ.get("PYTHONPATH", "")
+    return path in env.split(os.pathsep)
 
 
 def get_spark(
@@ -37,6 +54,14 @@ def get_spark(
     submit_args = os.environ.get("PYSPARK_SUBMIT_ARGS", "")
     if "--master" not in submit_args and not os.environ.get("SPARK_MASTER_URL"):
         builder = builder.master(f"local[{cpus}]")
+        # Python workers fork from a daemon that stops re-reading Spark's
+        # jar and pyspark.zip at the start of every task (0.14-0.23 CPU-s
+        # per task before Python 3.13; see plans/worker_daemon.py).  The
+        # daemon must import this package at start-up, which only holds
+        # when its JVM inherits the PYTHONPATH set above; a --py-files zip
+        # reaches workers per task, too late for the daemon
+        if _jvm_pythonpath_has(pkg_root):
+            builder = builder.config("spark.python.daemon.module", WORKER_DAEMON)
     # join-strategy envelope (guide §3.1/§9), parameterised for scale:
     # - prefer shuffled-hash over sort-merge: the engine's joins are narrow
     #   equi-joins (pair tables vs per-doc sketch tables) where the sort adds

@@ -13,6 +13,13 @@ library package (no tests, no caches).  Cluster usage:
 The zip import path is identical to the repo layout, so driver scripts only
 ``import minimizer_jaccard_estimator_spark`` — nothing else changes between
 local[32] and a 1000-executor cluster.
+
+A ``--py-files`` zip reaches Python workers per task, after the PySpark
+daemon has started, so it cannot carry the engine's worker daemon
+(``plans/worker_daemon.py``, which stops workers re-reading pyspark.zip and
+the Spark jar at every task before Python 3.13).  Where the package is
+installed on the executors, opt in with
+``--conf spark.python.daemon.module=minimizer_jaccard_estimator_spark.plans.worker_daemon``.
 """
 
 from __future__ import annotations

@@ -92,6 +92,24 @@ def test_embedding_neardup_lsh_deterministic(spark):
     assert p1 == p2 and p1
 
 
+def test_embedding_neardup_cache_registry_releases_unit_table(spark):
+    """The persisted unit-vector table goes to the caller's registry; once the
+    caller unpersists it, nothing stays cached and the pairs are unchanged."""
+    rows = _planted_neardup_corpus(n_base=80, n_dup=10)
+    emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
+    registry: list = []
+    pairs = embedding_neardup_pairs(emb, threshold=0.99, cache_registry=registry)
+    before = sorted(pairs.collect())
+    assert len(registry) == 1
+    unit = registry[0]
+    assert unit.storageLevel.useMemory or unit.storageLevel.useDisk
+    for df in registry:
+        df.unpersist(blocking=True)
+    level = unit.storageLevel
+    assert not (level.useMemory or level.useDisk or level.useOffHeap)
+    assert sorted(pairs.collect()) == before and before
+
+
 def test_embedding_neardup_handles_null_and_ragged_rows(spark):
     """Dimension contract (review r03): null and wrong-dimension vectors are
     excluded, the dimension is the MODAL size (robust to a corrupt leading

@@ -1,9 +1,12 @@
 """Bias-correction parity: our vectorized correction kernel vs the reference
-``jaccard_correction`` run directly on the same hash sequences (every case
-skips without a reference checkout)."""
+``jaccard_correction`` run directly on the same hash sequences (those cases
+skip without a reference checkout), plus one fixed pair pinned in
+``tests/golden_vectors.json`` that runs everywhere."""
 
 from __future__ import annotations
 
+import json
+import os
 import random
 
 import numpy as np
@@ -13,6 +16,8 @@ from minimizer_jaccard_estimator_spark import correction as C
 from minimizer_jaccard_estimator_spark import kernels as K
 from minimizer_jaccard_estimator_spark import pairwise as P
 from tests.conftest import mutate_dna, random_dna, reference_module, reference_script
+
+GOLDEN = os.path.join(os.path.dirname(__file__), "golden_vectors.json")
 
 
 @pytest.fixture(scope="module")
@@ -300,3 +305,22 @@ def test_pairwise_jaccard_matches_reference_functions(ref_mod):
     assert (ours_m.n_intersection, ours_m.n_union) == (md.nIntersection, md.nUnion)
     assert ours_m.jaccard == pytest.approx(md.jaccard)
     assert (ours_m.n_a, ours_m.n_b) == (md.nMinimizersA, md.nMinimizersB)
+
+
+def test_golden_correction_fixed_pair():
+    """Config counts and D/C/Bias (v0.6, v0.4, v0.4 without the 0.3.0 term)
+    on one fixed pair with deletions, insertions and swaps, captured before
+    any change to the correction kernel."""
+    with open(GOLDEN) as f:
+        g = json.load(f)["correction"]
+    ha = np.array(g["hash_a"], dtype=np.uint64)
+    hb = np.array(g["hash_b"], dtype=np.uint64)
+    counts = {tuple(row[:5]): row[5] for row in g["configuration_counts"]}
+    assert C.configuration_counts(ha, hb, g["w"]) == counts
+    for case in g["cases"]:
+        r = C.jaccard_correction(ha, hb, g["w"], version=case["version"],
+                                 omit_0_3_0_term=case["omit_0_3_0_term"])
+        assert r.n_configurations == counts
+        assert r.script_d == case["script_d"], case
+        for name in ("jaccard_from_d", "script_c", "bias"):
+            assert getattr(r, name) == pytest.approx(case[name], rel=1e-12, abs=1e-15), (name, case)

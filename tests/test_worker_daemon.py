@@ -1,0 +1,162 @@
+"""The engine's PySpark daemon: stat-keyed zip-import invalidation.
+
+Without Spark, the patched ``invalidate_caches`` re-reads an archive's
+directory only when the archive changed.  In the shared session, a warm
+Python worker's ``importlib.invalidate_caches()`` (which pyspark calls at the
+start of every task) reads no archive directory at all.
+"""
+
+from __future__ import annotations
+
+import importlib
+import importlib.util
+import sys
+import zipfile
+import zipimport
+
+import pytest
+
+from tests.conftest import REPO_ROOT
+
+
+@pytest.fixture()
+def daemon_mod(monkeypatch):
+    from minimizer_jaccard_estimator_spark.plans import worker_daemon
+
+    # isolate the module's stamps and zipimport's shared directory cache
+    monkeypatch.setattr(worker_daemon, "_stamps", {})
+    monkeypatch.setattr(zipimport, "_zip_directory_cache", dict(zipimport._zip_directory_cache))
+    return worker_daemon
+
+
+@pytest.fixture()
+def read_count(monkeypatch):
+    """Counts ``zipimport._read_directory`` calls (one per archive read)."""
+    reads = [0]
+    original = zipimport._read_directory
+
+    def counting(archive):
+        reads[0] += 1
+        return original(archive)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting)
+    return reads
+
+
+def _write_zip(path, modules: dict[str, str]) -> None:
+    with zipfile.ZipFile(path, "w") as zf:
+        for name, src in modules.items():
+            zf.writestr(f"{name}.py", src)
+
+
+def _load(importer: zipimport.zipimporter, name: str):
+    spec = importer.find_spec(name)
+    assert spec is not None, f"{name} not found in {importer.archive}"
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_import_patches_nothing(daemon_mod):
+    assert zipimport.zipimporter.invalidate_caches is daemon_mod._original_invalidate_caches
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 13),
+                    reason="Python 3.13 re-reads zip directories lazily; the patch targets the eager re-read")
+def test_stat_keyed_invalidate_rereads_only_changed_archives(daemon_mod, read_count, tmp_path):
+    archive = tmp_path / "mods.zip"
+    _write_zip(archive, {"m1": "VALUE = 1\n"})
+    imp = zipimport.zipimporter(str(archive))
+    assert _load(imp, "m1").VALUE == 1
+    invalidate = daemon_mod.stat_keyed_invalidate_caches
+
+    invalidate(imp)  # no stamp yet: one read, stamped
+    assert read_count[0] == 2  # the importer's own read plus this one
+    read_count[0] = 0
+    invalidate(imp)
+    second = zipimport.zipimporter(str(archive))  # shares the cached directory
+    invalidate(second)
+    assert read_count[0] == 0
+    assert second._files is imp._files
+
+    _write_zip(archive, {"m1": "VALUE = 1\n", "m2": "VALUE = 2\n"})
+    invalidate(imp)
+    assert read_count[0] == 1
+    assert _load(imp, "m2").VALUE == 2
+    invalidate(second)  # same archive, already re-read for `imp`
+    assert read_count[0] == 1
+    assert _load(second, "m2").VALUE == 2
+
+    archive.unlink()  # stat fails: the original method runs and finds nothing
+    invalidate(imp)
+    assert imp._files == {}
+    assert str(archive) not in zipimport._zip_directory_cache
+
+
+def test_patch_installed_only_before_python_3_13(daemon_mod, monkeypatch):
+    from pyspark import daemon
+
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches",
+                        daemon_mod._original_invalidate_caches)
+    started = []
+    monkeypatch.setattr(daemon, "manager", lambda: started.append(True))
+
+    monkeypatch.setattr(sys, "version_info", (3, 13, 0))
+    daemon_mod.main()
+    assert zipimport.zipimporter.invalidate_caches is daemon_mod._original_invalidate_caches
+
+    monkeypatch.setattr(sys, "version_info", (3, 11, 7))
+    daemon_mod.main()
+    assert zipimport.zipimporter.invalidate_caches is daemon_mod.stat_keyed_invalidate_caches
+    assert started == [True, True]
+
+
+def test_daemon_module_only_where_the_jvm_sees_the_package(spark, monkeypatch, tmp_path):
+    """get_spark names the engine's daemon only when the JVM that starts it
+    has the package on its PYTHONPATH; a JVM started by spark-submit (whose
+    environment is unknown here) keeps the stock daemon."""
+    from pyspark import SparkContext
+
+    from minimizer_jaccard_estimator_spark.plans.session import _jvm_pythonpath_has
+
+    # the running JVM's own environment decides for a later session
+    assert _jvm_pythonpath_has(REPO_ROOT)
+    assert not _jvm_pythonpath_has(str(tmp_path))
+
+    root = str(tmp_path)
+    monkeypatch.setattr(SparkContext, "_jvm", None)
+    monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
+    monkeypatch.setenv("PYTHONPATH", f"/elsewhere:{root}")
+    assert _jvm_pythonpath_has(root)
+    monkeypatch.setenv("PYTHONPATH", "/elsewhere")
+    assert not _jvm_pythonpath_has(root)
+    monkeypatch.setenv("PYTHONPATH", root)
+    monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "12345")
+    assert not _jvm_pythonpath_has(root)
+
+
+def test_warm_worker_reads_no_archive_directory(spark):
+    """pyspark calls importlib.invalidate_caches() at the start of every
+    Python task; under the stock daemon that re-reads all 16 zip importers'
+    archives (pyspark.zip, py4j, the spark-core jar) every time."""
+    def probe(_):
+        import importlib
+        import zipimport
+
+        reads = [0]
+        original = zipimport._read_directory
+
+        def counting(archive):
+            reads[0] += 1
+            return original(archive)
+
+        zipimport._read_directory = counting
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = original
+        yield reads[0]
+
+    rdd = spark.sparkContext.parallelize(range(4), 4)
+    rdd.mapPartitions(probe).collect()  # warm the workers
+    assert rdd.mapPartitions(probe).collect() == [0, 0, 0, 0]
