@@ -25,12 +25,14 @@ old documents and without re-running LSH over old-vs-old pairs:
    plain "assign to nearest cluster" schemes get wrong.
 
 Equivalence with a full recompute at the same config is tested
-(tests/test_delta.py).  Cost model at scale: sketching is O(new bytes); the
-band probe semi-joins the corpus band table down to the buckets the delta
-touches before any aggregation, so per-delta shuffle volume is O(delta
-bands + touched-bucket membership) and the only corpus-wide work left is
-the narrow columnar band/digest scans (the verify sketch lookup is pruned
-to candidate ids before its wide-array joins — VERDICT r03 #2).
+(tests/test_delta.py).  Cost model at scale: the new batch is read and
+assembled once per delta (one persisted conv_text table feeds every
+delta-side consumer); sketching is O(new bytes); the band probe semi-joins
+the corpus band table down to the buckets the delta touches before any
+aggregation, so per-delta shuffle volume is O(delta bands + touched-bucket
+membership) and the only corpus-wide work left is the narrow columnar
+band/digest scans (the verify sketch lookup is pruned to candidate ids
+before its wide-array joins — VERDICT r03 #2).
 """
 
 from __future__ import annotations
@@ -74,6 +76,8 @@ _ID_PUSHDOWN_CAP = 10_000
 
 @dataclass
 class DeltaResult:
+    # the assembled batch; with commit=False it is cache-backed until
+    # release(), after which an action re-reads and re-assembles the batch
     new_conv_text: DataFrame
     new_sketches: DataFrame
     candidates: DataFrame
@@ -109,6 +113,29 @@ def _endpoint_ids(pairs: DataFrame) -> DataFrame:
         .union(pairs.select(F.col("id_b").alias("conv_id")))
         .distinct()
     )
+
+
+def _commit_counts(
+    spark: SparkSession, store: StageStore, override: DataFrame
+) -> tuple[int, int, int]:
+    """The commit tail's three figures in one aggregate, read before the
+    appends: the last override seq (0 without an override table), the
+    override rows once ``override`` is appended, and the base clusters
+    rows (the compaction rule compares the last two)."""
+    no_seq = F.lit(None).cast("long").alias("seq")
+    rows = store.load(spark, "clusters").select(F.lit(True).alias("_base"), no_seq) \
+        .union(override.select(F.lit(False).alias("_base"), no_seq))
+    if store.exists("clusters_overrides", spark):
+        rows = rows.union(store.load(spark, "clusters_overrides").select(
+            F.lit(False).alias("_base"), F.col("seq").cast("long")
+        ))
+    base = F.col("_base")
+    row = rows.agg(
+        F.max("seq"),
+        F.count(F.when(~base, 1)),
+        F.count(F.when(base, 1)),
+    ).first()
+    return row[0] or 0, row[1], row[2]
 
 
 def run_dedup_delta(
@@ -180,6 +207,39 @@ def run_dedup_delta(
             "_anchors_config.json sidecar) or rebuild the store without the "
             "substring pass"
         )
+    # the substring pass's store checks, made (like every fail-loud check
+    # here) before anything is persisted
+    if cfg.substring_min_len is not None:
+        if store.exists("anchors", spark):
+            # probing a min_len-mismatched anchors table would silently
+            # yield wrong anchor matches — fail loudly (read-only check;
+            # legacy stores without the sidecar pass under the documented
+            # same-config precondition, as with the sketch manifest)
+            check_anchors_manifest(spark, store, cfg.substring_min_len,
+                                   stamp=False)
+        elif commit and not adopt_legacy_config and \
+                store.read_manifest(spark, _ANCHORS_MANIFEST) is None:
+            # A store WITH completed stages but WITHOUT an anchors table
+            # either predates the anchors stage (its base run computed the
+            # full substring pass, so backfill is exact) or was built
+            # WITHOUT the substring pass (its clusters lack old-vs-old span
+            # links, so no incremental delta can equal a full recompute at
+            # this config).  The two are indistinguishable from the store
+            # alone — require the caller to assert config parity, the same
+            # conservative rule as the pre-manifest sketch-config gate
+            # above.  A store already carrying a MATCHING anchors sidecar (a
+            # crashed backfill stamps the sidecar first) needs no
+            # assertion: the sidecar is the recorded config.
+            raise ValueError(
+                "store has no substring anchors probe table: it either "
+                "predates the anchors stage or was built WITHOUT the "
+                "substring pass (in which case its clusters lack "
+                "old-vs-old span links and a delta can never equal a full "
+                "recompute at this config). Pass adopt_legacy_config=True "
+                "to assert the store's base run used substring_min_len="
+                f"{cfg.substring_min_len} and backfill the probe table, or "
+                "rebuild the store with run_dedup"
+            )
     old_conv = store.load(spark, "conv_text")
     old_sk = store.load(spark, "sketches")
     # merged view: the base assignment overlaid with earlier deltas'
@@ -190,13 +250,19 @@ def run_dedup_delta(
         new_transcripts = new_transcripts.repartition(
             cfg.salt_partitions, F.col("conv_id"), F.col("turn_idx")
         )
-    new_conv = assemble_conversations(new_transcripts)
+    # the batch is read and assembled ONCE: the overlap guard, the sketch
+    # source, the digests (exact-anchor probe and digests append), the new
+    # docs' default clusters and the conv_text append all read this cache;
+    # without it each consumer re-reads and re-shuffles the batch
+    new_conv = assemble_conversations(new_transcripts).persist()
+    caches: list[DataFrame] = [new_conv]
     # guard against the CORPUS table (conv_text), not the clusters table:
     # conv_text is appended first during commit, so a retry after a commit
     # that died mid-way (rows appended, clusters not yet swapped) fails HERE,
     # loudly, instead of silently double-appending the delta's corpus rows
     overlap = new_conv.join(old_conv.select("conv_id"), "conv_id").limit(1).count()
     if overlap:
+        new_conv.unpersist()
         raise ValueError(
             "new_transcripts contain conv_ids already present in the corpus "
             "conv_text table; delta ingestion requires fresh ids.  If a prior "
@@ -217,7 +283,7 @@ def run_dedup_delta(
     if "digest" in old_sk.columns:
         new_sk = new_sk.withColumn("digest", text_digest(F.col("text")))
     new_sk = new_sk.drop("text").persist()
-    caches: list[DataFrame] = [new_sk]
+    caches.append(new_sk)
 
     sk_cols = ["conv_id", "minimizers", "n_shingles", "minhash", "simhash"]
     all_sk = old_sk.select(*sk_cols).union(new_sk.select(*sk_cols))
@@ -260,6 +326,8 @@ def run_dedup_delta(
     anchors = new_anchor.join(old_anchor, "_h", "left").select(
         "_h", F.coalesce("_old", "_new").alias("_anchor")
     )
+    # delta-sized, and read by both the candidate union and `accepted`:
+    # cached so the corpus digest semi-join and both aggregations run once
     exact = (
         new_digests.join(anchors, "_h")
         .where(F.col("_nid") != F.col("_anchor"))
@@ -267,7 +335,9 @@ def run_dedup_delta(
             F.least("_nid", "_anchor").alias("id_a"),
             F.greatest("_nid", "_anchor").alias("id_b"),
         )
+        .persist()
     )
+    caches.append(exact)
 
     # LSH: new bands probe the (old ∪ new) band table.  Old bands come from
     # the store's incremental bands stage (~24 B/row, appended by every
@@ -398,12 +468,6 @@ def run_dedup_delta(
             cfg.sketch.hash_type, cfg.sketch.hash_seed,
         ).select("id", "anchor").distinct()
         if store.exists("anchors", spark):
-            # probing a min_len-mismatched anchors table would silently
-            # yield wrong anchor matches — fail loudly (read-only check;
-            # legacy stores without the sidecar pass under the documented
-            # same-config precondition, as with the sketch manifest)
-            check_anchors_manifest(spark, store, cfg.substring_min_len,
-                                   stamp=False)
             old_anchors = store.load(spark, "anchors").select(
                 F.col("conv_id").alias("id"), "anchor"
             )
@@ -413,31 +477,6 @@ def run_dedup_delta(
                 cfg.sketch.hash_type, cfg.sketch.hash_seed,
             ).select("id", "anchor").distinct()
             if commit:
-                # A store WITH completed stages but WITHOUT an anchors table
-                # either predates the anchors stage (its base run computed
-                # the full substring pass, so backfill is exact) or was
-                # built WITHOUT the substring pass (its clusters lack
-                # old-vs-old span links, so no incremental delta can equal a
-                # full recompute at this config).  The two are
-                # indistinguishable from the store alone — require the
-                # caller to assert config parity, the same conservative rule
-                # as the pre-manifest sketch-config gate above.  A store
-                # already carrying a MATCHING anchors sidecar (a crashed
-                # backfill stamps the sidecar first) needs no assertion:
-                # the sidecar is the recorded config.
-                if not adopt_legacy_config and \
-                        store.read_manifest(spark, _ANCHORS_MANIFEST) is None:
-                    raise ValueError(
-                        "store has no substring anchors probe table: it "
-                        "either predates the anchors stage or was built "
-                        "WITHOUT the substring pass (in which case its "
-                        "clusters lack old-vs-old span links and a delta "
-                        "can never equal a full recompute at this config). "
-                        "Pass adopt_legacy_config=True to assert the "
-                        "store's base run used substring_min_len="
-                        f"{cfg.substring_min_len} and backfill the probe "
-                        "table, or rebuild the store with run_dedup"
-                    )
                 # first committed delta backfills the probe table; the
                 # config sidecar is stamped BEFORE the table materializes —
                 # a crash between the two must leave the fail-loud manifest
@@ -561,8 +600,9 @@ def run_dedup_delta(
         # 1. materialize the override rows as this delta's lineage table
         #    (delta_cluster_overrides) BEFORE any append: its plan reads the
         #    exact-pair DAG, which scans the digests table the appends below
-        #    modify.  A crash before step 2 leaves the store semantically
-        #    untouched;
+        #    modify.  One aggregate then reads the prior override seq and
+        #    the two row counts the compaction rule compares.  A crash
+        #    before step 2 leaves the store semantically untouched;
         # 2. append the delta's conv_text/sketches rows, then its
         #    digests/bands rows (the incremental probe tables future deltas
         #    read instead of rescanning the corpus).  conv_text goes FIRST:
@@ -575,11 +615,6 @@ def run_dedup_delta(
         #    for remote :// roots), drop the override table.  A crash after
         #    the swap but before the drop is harmless: re-applying override
         #    rows that already match the base is a no-op.
-        if store.exists("clusters_overrides", spark):
-            prior_seq = store.load(spark, "clusters_overrides") \
-                .agg(F.max("seq")).collect()[0][0] or 0
-        else:
-            prior_seq = 0
         new_defaults = new_conv.select(
             "conv_id", F.col("conv_id").alias("cluster_id")
         )
@@ -588,6 +623,7 @@ def run_dedup_delta(
         )
         override = store.materialize(spark, "delta_cluster_overrides",
                                      override, resume=False)
+        prior_seq, ov_rows, base_rows = _commit_counts(spark, store, override)
         new_conv.select(*old_conv.columns).write.mode("append") \
             .format(store.format).save(store.path("conv_text"))
         new_sk.select(*old_sk.columns).write.mode("append") \
@@ -604,8 +640,6 @@ def run_dedup_delta(
                 .write.mode("append").format(store.format).save(store.path("anchors"))
         override.withColumn("seq", F.lit(prior_seq + 1)).write.mode("append") \
             .format(store.format).save(store.path("clusters_overrides"))
-        ov_rows = store.load(spark, "clusters_overrides").count()
-        base_rows = store.load(spark, "clusters").count()
         if ov_rows > compact_overrides_threshold * base_rows:
             load_clusters(spark, store).write.mode("overwrite") \
                 .format(store.format).save(store.path("clusters__pending"))

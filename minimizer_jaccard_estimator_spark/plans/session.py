@@ -51,8 +51,14 @@ def get_spark(
     builder = SparkSession.builder
     # spark-submit's --master must win; only default to local[] when nothing
     # configured it (builder options would otherwise override spark-submit)
+    # -- spark-submit sets no PYSPARK_SUBMIT_ARGS for a Python application;
+    # it hands this process the port of the JVM it launched instead
+    # (pyspark sets no PYSPARK_GATEWAY_PORT for a gateway it launches
+    # itself), and that JVM already holds the master spark-submit configured
     submit_args = os.environ.get("PYSPARK_SUBMIT_ARGS", "")
-    if "--master" not in submit_args and not os.environ.get("SPARK_MASTER_URL"):
+    submitted_jvm = "PYSPARK_GATEWAY_PORT" in os.environ
+    if (not submitted_jvm and "--master" not in submit_args
+            and not os.environ.get("SPARK_MASTER_URL")):
         builder = builder.master(f"local[{cpus}]")
         # Python workers fork from a daemon that stops re-reading Spark's
         # jar and pyspark.zip at the start of every task (0.14-0.23 CPU-s

@@ -477,6 +477,38 @@ def test_delta_override_compaction_folds_into_base(spark, tmp_path):
     assert base.count() == corpus.select("conv_id").distinct().count()
 
 
+def test_committed_delta_reads_batch_once(spark, tmp_path):
+    """A committed delta reads its new batch once: the overlap guard, the
+    sketch, the digests, the exact pairs, the cluster defaults and the
+    conv_text append all derive from one persisted assembly instead of
+    re-reading and re-assembling the batch per consumer."""
+    from pyspark.sql.types import StringType
+
+    corpus = synthetic_transcripts(spark, n_base=20, dup_factor=2, seed=23).cache()
+    idx = F.substring("conv_id", 2, 10).cast("long")
+    old = corpus.where(idx % 3 != 0)
+    new = corpus.where(idx % 3 == 0)
+    store = StageStore(root=str(tmp_path / "prior"))
+    run_dedup(spark, old, CFG, store=store).release()
+
+    reads = spark.sparkContext.accumulator(0)
+
+    def counted(conv_id):
+        reads.add(1)
+        return conv_id
+
+    batch = new.withColumn("conv_id", F.udf(counted, StringType())("conv_id"))
+    n_turns = new.count()
+    res = run_dedup_delta(spark, batch, CFG, store, commit=True)
+    res.clusters.collect()
+    res.release()
+    assert reads.value == n_turns, (
+        f"{reads.value} batch row reads for {n_turns} turns "
+        f"({reads.value / n_turns:.1f}x)"
+    )
+    corpus.unpersist()
+
+
 def test_delta_simhash_config_matches_full_recompute(spark, tmp_path):
     """Round 5: the SimHash prefilter is supported incrementally — delta at
     simhash_max_hamming=16 == full recompute at the same config (the r04

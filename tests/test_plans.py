@@ -92,3 +92,38 @@ def test_aggregations_have_map_side_partial(spark, name):
     before the exchange) so the shuffle carries combined rows, not raw."""
     plan = _plan(entry_mod.queries()[name](spark, SF_DIR))
     assert "partial_" in plan.lower(), plan
+
+
+def test_get_spark_keeps_spark_submit_master(tmp_path):
+    """spark-submit sets no PYSPARK_SUBMIT_ARGS for a Python application, so
+    get_spark must recognise the JVM it launched and keep its --master (and
+    the stock Python daemon, which a --py-files package could not start)."""
+    import os
+    import subprocess
+    import sys
+
+    import pyspark
+
+    from tests.conftest import REPO_ROOT
+
+    script = tmp_path / "app.py"
+    script.write_text(
+        "from minimizer_jaccard_estimator_spark.plans.session import get_spark\n"
+        "spark = get_spark(cpus=3)\n"
+        "print('MASTER', spark.sparkContext.master)\n"
+        "print('DAEMON', spark.conf.get('spark.python.daemon.module', 'stock'))\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items()
+           if k not in ("PYSPARK_SUBMIT_ARGS", "PYSPARK_GATEWAY_PORT", "SPARK_MASTER_URL")}
+    env["PYTHONPATH"] = REPO_ROOT
+    env["PYSPARK_PYTHON"] = sys.executable
+    submit = os.path.join(os.path.dirname(pyspark.__file__), "bin", "spark-submit")
+    out = subprocess.run(
+        [submit, "--master", "local[2]", "--conf", "spark.ui.enabled=false", str(script)],
+        env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    lines = dict(line.split(" ", 1) for line in out.stdout.splitlines()
+                 if line.startswith(("MASTER ", "DAEMON ")))
+    assert lines == {"MASTER": "local[2]", "DAEMON": "stock"}

@@ -1,13 +1,16 @@
-"""The engine's PySpark daemon: stat-keyed zip-import invalidation.
+"""The engine's PySpark daemon: stat-keyed zip-import invalidation and a
+heap freeze after a worker's first task.
 
 Without Spark, the patched ``invalidate_caches`` re-reads an archive's
 directory only when the archive changed.  In the shared session, a warm
 Python worker's ``importlib.invalidate_caches()`` (which pyspark calls at the
-start of every task) reads no archive directory at all.
+start of every task) reads no archive directory at all, and a warm worker's
+heap is frozen out of pyspark's per-task ``gc.collect()``.
 """
 
 from __future__ import annotations
 
+import gc
 import importlib
 import importlib.util
 import sys
@@ -58,7 +61,27 @@ def _load(importer: zipimport.zipimporter, name: str):
 
 
 def test_import_patches_nothing(daemon_mod):
+    from pyspark import daemon
+
     assert zipimport.zipimporter.invalidate_caches is daemon_mod._original_invalidate_caches
+    assert not hasattr(daemon.worker, "__wrapped__")
+
+
+def test_worker_freezes_heap_once_after_first_task(daemon_mod, monkeypatch):
+    events = []
+    monkeypatch.setattr(gc, "collect", lambda: events.append("collect"))
+    monkeypatch.setattr(gc, "freeze", lambda: events.append("freeze"))
+    codes = iter([0, 0, 1])
+    run = daemon_mod.freeze_after_first_task(lambda sock, auth: next(codes))
+    assert run(None, False) == 0
+    assert events == ["collect", "freeze"]
+    assert run(None, True) == 0
+    assert run(None, True) == 1
+    assert events == ["collect", "freeze"]
+    # a worker whose first task failed freezes nothing
+    events.clear()
+    assert daemon_mod.freeze_after_first_task(lambda sock, auth: 1)(None, False) == 1
+    assert events == []
 
 
 @pytest.mark.skipif(sys.version_info >= (3, 13),
@@ -100,6 +123,8 @@ def test_patch_installed_only_before_python_3_13(daemon_mod, monkeypatch):
                         daemon_mod._original_invalidate_caches)
     started = []
     monkeypatch.setattr(daemon, "manager", lambda: started.append(True))
+    stock_worker = daemon.worker
+    monkeypatch.setattr(daemon, "worker", stock_worker)
 
     monkeypatch.setattr(sys, "version_info", (3, 13, 0))
     daemon_mod.main()
@@ -109,6 +134,8 @@ def test_patch_installed_only_before_python_3_13(daemon_mod, monkeypatch):
     daemon_mod.main()
     assert zipimport.zipimporter.invalidate_caches is daemon_mod.stat_keyed_invalidate_caches
     assert started == [True, True]
+    # the heap freeze is installed on every version (main ran twice)
+    assert daemon.worker.__wrapped__.__wrapped__ is stock_worker
 
 
 def test_daemon_module_only_where_the_jvm_sees_the_package(spark, monkeypatch, tmp_path):
@@ -160,3 +187,24 @@ def test_warm_worker_reads_no_archive_directory(spark):
     rdd = spark.sparkContext.parallelize(range(4), 4)
     rdd.mapPartitions(probe).collect()  # warm the workers
     assert rdd.mapPartitions(probe).collect() == [0, 0, 0, 0]
+
+
+def test_warm_worker_heap_is_frozen(spark):
+    """After its first task a worker of the engine's daemon has frozen its
+    long-lived objects out of the collection pyspark runs after every task."""
+    def probe(_):
+        import gc
+        import os
+
+        yield os.getpid(), gc.get_freeze_count()
+
+    rdd = spark.sparkContext.parallelize(range(4), 4)
+    seen = set()
+    warm = []
+    for _ in range(3):
+        for pid, frozen in rdd.mapPartitions(probe).collect():
+            if pid in seen:
+                warm.append(frozen)
+            seen.add(pid)
+    assert warm, "no Python worker ran a second task"
+    assert min(warm) > 0
