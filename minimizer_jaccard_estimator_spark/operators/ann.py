@@ -32,6 +32,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import ArrayType, LongType
 
+from .lsh import self_pairs
+
 
 def _cosine(v_col: str, q: list[float]):
     qn = float(np.linalg.norm(np.array(q, dtype=np.float64)))
@@ -175,33 +177,15 @@ def embedding_neardup_pairs(
     # UDF, re-executed per consumer (r06, guide §5 "reused AND expensive to
     # recompute"; measured media_neardup 8.6 -> 2.9 s at sf0.1).  Narrow
     # (id, unit-vector) rows, MEMORY_AND_DISK; released through
-    # cache_registry, same contract as substring_candidate_pairs.
+    # cache_registry, same contract as substring.duplicate_spans.
     unit = unit.persist()
     if cache_registry is not None:
         cache_registry.append(unit)
     keys = _hyperplane_bucket_udf(dim, n_planes, n_tables, seed)(F.col("_u"))
     b = unit.select(id_col, F.explode(keys).alias("bucket"))
 
-    # size buckets BEFORE collecting id lists (map-side-combined count rows,
-    # never a degenerate bucket's full membership in one aggregation buffer);
-    # the collect_list then reuses the join's bucket partitioning
-    sizes = b.groupBy("bucket").agg(F.count("*").alias("_n")).where(F.col("_n") >= 2)
-    if max_bucket_size is not None:
-        sizes = sizes.where(F.col("_n") <= max_bucket_size)
-    buckets = (
-        b.join(sizes.select("bucket"), "bucket")
-        .groupBy("bucket").agg(F.collect_list(id_col).alias("_ids"))
-    )
-    pairs = (
-        buckets.select(F.col("_ids"), F.posexplode("_ids").alias("_i", "_a"))
-        .select(
-            F.col("_a"),
-            F.explode(F.slice(F.col("_ids"), F.col("_i") + F.lit(2),
-                              F.size("_ids"))).alias("_b"),
-        )
-        .select(F.least("_a", "_b").alias("id_a"), F.greatest("_a", "_b").alias("id_b"))
-        .distinct()
-    )
+    # the LSH bucket-pair core: count-gated buckets, in-JVM pair expansion
+    pairs = self_pairs(b, ["bucket"], id_col, max_bucket_size).distinct()
     ua = unit.select(F.col(id_col).alias("id_a"), F.col("_u").alias("_ua"))
     ub = unit.select(F.col(id_col).alias("id_b"), F.col("_u").alias("_ub"))
     dot = F.aggregate(F.zip_with("_ua", "_ub", lambda x, y: x * y), F.lit(0.0),

@@ -7,16 +7,16 @@ old documents and without re-running LSH over old-vs-old pairs:
 
 1. assemble + sketch ONLY the new conversations (the expensive per-byte UDF
    runs on the delta, not the corpus);
-2. candidates = exact-digest matches and LSH band joins of NEW docs against
-   (old ∪ new) docs — old-vs-old pairs were already resolved by the prior
-   run and are represented by its cluster assignments.  The OLD side is
-   probed through the store's incremental ``digests`` (8 B/doc) and
-   ``bands`` (~24 B/row) tables that ``run_dedup`` materializes and each
-   committed delta appends to — the corpus text is never rehashed and the
-   wide signature rows are never re-banded (stores from before these stages
-   existed are migrated in place by the first COMMITTED delta: one O(corpus)
-   backfill, incremental after; commit=False derives the same rows lazily
-   without writing);
+2. candidates = exact-digest matches and LSH band probes
+   (:func:`.lsh.probe_pairs`) of NEW docs against (old ∪ new) docs —
+   old-vs-old pairs were already resolved by the prior run and are
+   represented by its cluster assignments.  The OLD side is probed through
+   the store's incremental ``digests`` (8 B/doc) and ``bands`` (~24 B/row)
+   tables that ``run_dedup`` materializes and each committed delta appends
+   to — the corpus text is never rehashed and the wide signature rows are
+   never re-banded (stores from before these stages existed are migrated in
+   place by the first COMMITTED delta: one O(corpus) backfill, incremental
+   after; commit=False derives the same rows lazily without writing);
 3. exact minimizer-Jaccard verify of those candidates — against the sketch
    rows of the CANDIDATE ids only (id filter pushed into the parquet scan,
    or a semi-join above the cap), never a full corpus wide-array scan;
@@ -53,7 +53,7 @@ from .dedup import (
     check_store_manifest,
     load_clusters,
 )
-from .lsh import band_hashes, simhash_filter, text_digest
+from .lsh import band_hashes, endpoint_ids, probe_pairs, simhash_filter, text_digest
 from .substring import anchor_table, span_stats_for_pairs, substring_dup_pairs
 from .verify import attach_pair_columns, verify_pairs, verify_pairs_staged
 
@@ -104,15 +104,6 @@ class DeltaResult:
         for df in self._caches or []:
             df.unpersist()
         self._caches = []
-
-
-def _endpoint_ids(pairs: DataFrame) -> DataFrame:
-    """Distinct conv_ids appearing on either side of an (id_a, id_b) table."""
-    return (
-        pairs.select(F.col("id_a").alias("conv_id"))
-        .union(pairs.select(F.col("id_b").alias("conv_id")))
-        .distinct()
-    )
 
 
 def _commit_counts(
@@ -349,41 +340,24 @@ def run_dedup_delta(
         old_bands = band_hashes(old_sk.select("conv_id", "minhash"), cfg.sketch)
         if commit:
             old_bands = store.materialize(spark, "bands", old_bands)
-    ab = old_bands.unionByName(nb)
-    # only buckets the DELTA touches can emit pairs: semi-join the corpus
-    # band table down to those first (the delta key set is small — AQE
-    # broadcasts it), so the size aggregation and the pair join below shuffle
+    # only buckets the DELTA touches can emit pairs, so the probe shuffles
     # touched-bucket rows only, never the whole corpus band table
-    touched = nb.select("band_id", "band_hash").distinct()
-    ab = ab.join(touched, ["band_id", "band_hash"], "leftsemi")
+    capped = cfg.max_bucket_size is not None
+    lsh = probe_pairs(nb, old_bands.unionByName(nb), ["band_id", "band_hash"],
+                      "conv_id", cfg.max_bucket_size, with_dropped=capped,
+                      cache_registry=caches)
     dropped_buckets = None
-    if cfg.max_bucket_size is not None:
-        sizes = ab.groupBy("band_id", "band_hash").agg(F.count("*").alias("_n")).persist()
-        caches.append(sizes)
+    if capped:
         # no silent caps: record the excluded hot buckets like run_dedup does
         # (scoped to delta-touched buckets — the only ones this run consults).
         # Only a COMMITTED delta writes the lineage table; a commit=False
         # what-if surfaces them on the result instead of clobbering the last
         # committed run's delta_lsh_dropped_buckets (ADVICE r03)
-        dropped_buckets = sizes.where(F.col("_n") > cfg.max_bucket_size).select(
-            "band_id", "band_hash", F.col("_n").alias("n_docs")
-        )
+        lsh, dropped_buckets = lsh
         if commit:
             dropped_buckets = store.materialize(
                 spark, "delta_lsh_dropped_buckets", dropped_buckets, resume=False
             )
-        keep = sizes.where(F.col("_n") <= cfg.max_bucket_size).drop("_n")
-        # filtering ab suffices: the nb-to-ab equi-join below can only emit
-        # pairs whose bucket survived in ab
-        ab = ab.join(keep, ["band_id", "band_hash"])
-    lsh = (
-        nb.select("band_id", "band_hash", F.col("conv_id").alias("_nid"))
-        .join(ab.select("band_id", "band_hash", F.col("conv_id").alias("_oid")),
-              ["band_id", "band_hash"])
-        .where(F.col("_nid") != F.col("_oid"))
-        .select(F.least("_nid", "_oid").alias("id_a"),
-                F.greatest("_nid", "_oid").alias("id_b"))
-    )
     candidates = exact.union(lsh).distinct()
 
     if cfg.simhash_max_hamming is not None:
@@ -397,7 +371,7 @@ def run_dedup_delta(
         candidates = candidates.persist()
         caches.append(candidates)
         sim_sk = all_sk.select("conv_id", "simhash").join(
-            _endpoint_ids(candidates), "conv_id", "leftsemi"
+            endpoint_ids(candidates), "conv_id", "leftsemi"
         )
         candidates = simhash_filter(
             attach_pair_columns(candidates, sim_sk, ["simhash"]),
@@ -429,7 +403,7 @@ def run_dedup_delta(
     # is small enough to collect — instead of 2–4 full wide-array scans
     # inside the verify joins (attach_pair_columns joins the per-doc table
     # twice, and staged verify does that twice over).
-    cand_ids = _endpoint_ids(candidates).persist()
+    cand_ids = endpoint_ids(candidates).persist()
     caches.append(cand_ids)
     id_sample = cand_ids.limit(_ID_PUSHDOWN_CAP + 1).collect()
     if len(id_sample) <= _ID_PUSHDOWN_CAP:
@@ -489,42 +463,26 @@ def run_dedup_delta(
                     spark, "anchors",
                     old_anchors.select(F.col("id").alias("conv_id"), "anchor"),
                 ).select(F.col("conv_id").alias("id"), "anchor")
-        touched_anchors = new_anchors.select("anchor").distinct()
-        per_doc = old_anchors.unionByName(new_anchors).join(
-            touched_anchors, "anchor", "leftsemi"
+        anchors_capped = cfg.substring_max_anchor_docs is not None
+        sub_pairs = probe_pairs(
+            new_anchors, old_anchors.unionByName(new_anchors), ["anchor"], "id",
+            cfg.substring_max_anchor_docs, with_dropped=anchors_capped, cache_registry=caches,
         )
-        new_side = new_anchors
-        if cfg.substring_max_anchor_docs is not None:
-            freq = per_doc.groupBy("anchor").agg(F.count("*").alias("n_docs")).persist()
-            caches.append(freq)
+        if anchors_capped:
             # no silent caps (same rule as the LSH bucket cap): commit runs
             # record the excluded hot anchors as a lineage table, what-ifs
             # surface them on the result only
-            dropped_anchors = freq.where(
-                F.col("n_docs") > cfg.substring_max_anchor_docs
-            ).select("anchor", "n_docs")
+            sub_pairs, dropped_anchors = sub_pairs
             if commit:
                 dropped_anchors = store.materialize(
                     spark, "delta_substring_dropped_anchors", dropped_anchors,
                     resume=False,
                 )
-            keep = freq.where(
-                F.col("n_docs") <= cfg.substring_max_anchor_docs
-            ).select("anchor")
-            per_doc = per_doc.join(keep, "anchor")
-            new_side = new_side.join(keep, "anchor")
-        sub_pairs = (
-            new_side.select("anchor", F.col("id").alias("_nid"))
-            .join(per_doc.select("anchor", F.col("id").alias("_oid")), "anchor")
-            .where(F.col("_nid") != F.col("_oid"))
-            .select(F.least("_nid", "_oid").alias("id_a"),
-                    F.greatest("_nid", "_oid").alias("id_b"))
-            .distinct()
-        )
+        sub_pairs = sub_pairs.distinct()
         # per-pair suffix-array kernel over the delta pairs only; texts are
         # pruned to the pair endpoints first so the corpus conv_text table
         # contributes one semi-joined narrow scan, not a full text shuffle
-        pair_ids = _endpoint_ids(sub_pairs)
+        pair_ids = endpoint_ids(sub_pairs)
         texts = (
             old_conv.select("conv_id", "text")
             .unionByName(new_conv.select("conv_id", "text"))
@@ -560,7 +518,7 @@ def run_dedup_delta(
     old_edges = old_clusters.where(F.col("conv_id") != F.col("cluster_id")).select(
         F.col("conv_id").alias("id_a"), F.col("cluster_id").alias("id_b")
     )
-    touched_ids = _endpoint_ids(accepted)
+    touched_ids = endpoint_ids(accepted)
     # roots of every prior component containing a touched id (the touched id
     # may be a member or the root itself; new ids have no old_clusters row)
     touched_roots = (

@@ -4,17 +4,17 @@ north_rule requirement: "a distributed suffix-array pass for exact
 substring-level duplicate spans".  Design (Spark-first, no per-row Python):
 
 1. **Anchor stage** — every document is winnowed into (w,k) minimizer anchors
-   of its byte shingles (same kernels as the sketch stage, reference
+   of its byte shingles (the sketch stage's own UDF, reference
    ``winnowed_minimizers.py:18-53``), with ``k + w - 1 = min_len``.  The
    winnowing guarantee (Schleimer et al., MOSS): any two documents sharing an
    exact substring of length >= min_len share at least one anchor VALUE, so
    the UNCAPPED anchor equi-join has perfect recall for spans >= min_len.
    The frequency cap below trades recall on corpus-wide boilerplate anchors
    for bounded work — capped anchors are recorded, never silently dropped.
-2. **Candidate join** — exploded ``(doc_id, anchor)`` self-join on anchor
-   hash, hot anchors capped by frequency (stop-shingle removal) exactly like
-   the LSH bucket cap; this is the scale knob that keeps the shuffle linear
-   in corpus size rather than quadratic in bucket size.
+2. **Candidate pairs** — the LSH bucket-pair core (:func:`.lsh.self_pairs`)
+   over distinct ``(doc_id, anchor)`` rows, hot anchors capped by frequency
+   (stop-shingle removal) exactly like the LSH bucket cap; this is the scale
+   knob that keeps the shuffle linear in corpus size, not quadratic.
 3. **Verify stage** — candidate pairs join back to their texts and a
    vectorized pandas UDF runs the per-pair suffix-array kernel
    (:mod:`..suffix`: prefix-doubling SA + Kasai LCP over ``a+SEP+b``) to emit
@@ -41,8 +41,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .. import kernels as K
+from ..functions.sketch import SketchConfig, sketch_udf
 from ..suffix import substring_stats
+from .lsh import self_pairs
 
 
 def anchor_params(min_len: int) -> tuple[int, int]:
@@ -54,27 +55,6 @@ def anchor_params(min_len: int) -> tuple[int, int]:
     return k, w
 
 
-_ANCHOR_SCHEMA = ArrayType(
-    StructType([StructField("anchor", LongType()), StructField("pos", IntegerType())])
-)
-
-
-def _anchor_udf(min_len: int, hash_type: str, seed: int):
-    k, w = anchor_params(min_len)
-
-    def run(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for texts in batches:
-            out = []
-            for t in texts:
-                h = K.hash_text_shingles(t or "", k, hash_type, seed)
-                v, p = K.winnow_minimizers(h, w)
-                iv = K.u64_to_i64(v)
-                out.append([{"anchor": int(a), "pos": int(q)} for a, q in zip(iv, p)])
-            yield pd.Series(out)
-
-    return F.pandas_udf(run, _ANCHOR_SCHEMA)
-
-
 def anchor_table(
     docs: DataFrame,
     min_len: int,
@@ -83,65 +63,17 @@ def anchor_table(
     id_col: str = "conv_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """Exploded (id, anchor, pos) winnowed-anchor table."""
-    u = _anchor_udf(min_len, hash_type, seed)
+    """Exploded (id, anchor, pos) winnowed-anchor table: the (w,k)
+    minimizers of each document's byte shingles from the one sketch UDF."""
+    k, w = anchor_params(min_len)
+    cfg = SketchConfig(k=k, w=w, hash_type=hash_type, hash_seed=seed)
+    u = sketch_udf(cfg, ("minimizers", "positions"))
     return (
-        docs.select(F.col(id_col).alias("id"), u(F.col(text_col)).alias("_a"))
-        .select("id", F.explode("_a").alias("a"))
-        .select("id", F.col("a.anchor").alias("anchor"), F.col("a.pos").alias("pos"))
+        docs.select(F.col(id_col).alias("id"), u(F.col(text_col)).alias("_s"))
+        .select("id", F.explode(F.arrays_zip("_s.minimizers", "_s.positions")).alias("a"))
+        .select("id", F.col("a.minimizers").alias("anchor"),
+                F.col("a.positions").alias("pos"))
     )
-
-
-def substring_candidate_pairs(
-    anchors: DataFrame, max_bucket_size: int | None = 200,
-    with_dropped: bool = False,
-    cache_registry: list | None = None,
-) -> DataFrame | tuple[DataFrame, DataFrame]:
-    """Distinct (id_a < id_b) pairs sharing >=1 anchor value.
-
-    Hot anchors (> max_bucket_size docs) are excluded before the self-join —
-    they are boilerplate shingles whose pair blow-up is quadratic.  NOTE this
-    is a recall trade: duplicate spans whose ONLY shared anchors are
-    corpus-wide boilerplate are missed; ``with_dropped=True`` returns the
-    excluded (anchor, n_docs) table so capped runs are auditable (no silent
-    caps), and raising max_bucket_size restores full recall.
-
-    The distinct (id, anchor) table feeds FOUR consumers (the frequency
-    aggregate, the keep join, and both self-join sides); it is persisted so
-    the anchor winnow UDF runs once per corpus, not once per consumer
-    (measured 163 s -> 29 s on the full duplicate_spans query at sf0.1 —
-    guide §5 "reused AND expensive to recompute").  Persisted handles are
-    appended to ``cache_registry`` when given (the dedup pipeline's release
-    discipline); without a registry they stay cached for the session — the
-    one-shot query path — at MEMORY_AND_DISK, bounded by the narrow
-    (id, anchor) row count (~16 B/row, linear in corpus size).
-    """
-    per_doc = anchors.select("id", "anchor").distinct().persist()
-    if cache_registry is not None:
-        cache_registry.append(per_doc)
-    dropped = None
-    if max_bucket_size is not None:
-        freq = per_doc.groupBy("anchor").agg(F.count("*").alias("n_docs"))
-        if with_dropped:
-            freq = freq.persist()
-            if cache_registry is not None:
-                cache_registry.append(freq)
-            dropped = freq.where(F.col("n_docs") > max_bucket_size)
-        keep = freq.where(F.col("n_docs") <= max_bucket_size).select("anchor")
-        per_doc = per_doc.join(keep, "anchor")
-    elif with_dropped:
-        dropped = anchors.sparkSession.createDataFrame([], "anchor long, n_docs long")
-    a = per_doc.select(F.col("anchor"), F.col("id").alias("id_a"))
-    b = per_doc.select(F.col("anchor"), F.col("id").alias("id_b"))
-    pairs = (
-        a.join(b, "anchor")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    if with_dropped:
-        return pairs, dropped
-    return pairs
 
 
 _SPAN_SCHEMA = StructType(
@@ -250,32 +182,42 @@ def duplicate_spans(
     Output: one row per candidate doc pair with exact duplicated-byte
     coverage on each side, the longest shared substring, the TRUE maximal
     span count, and (capped) span coordinates.  Pairs with no span >=
-    min_len are dropped.  ``with_dropped=True`` also returns the hot-anchor
-    table excluded by the frequency cap.  ``anchors`` short-circuits the
-    anchor UDF pass with a precomputed (id, anchor) table — run_dedup passes
-    the store's materialized ``anchors`` probe stage so the winnow UDF runs
-    once per corpus, not once per consumer.
+    min_len are dropped.  ``anchors`` short-circuits the anchor UDF pass
+    with a precomputed (id, anchor) table — run_dedup passes the store's
+    materialized ``anchors`` probe stage so the winnow UDF runs once per
+    corpus, not once per consumer.
 
-    The candidate pair table is persisted before the span verify: its two
-    text-attach joins would otherwise re-run the whole anchor/self-join
-    chain once per side (see substring_candidate_pairs for the registry/
-    lifetime contract).
+    Candidates are the distinct pairs sharing >=1 anchor value.  Hot anchors
+    (> max_bucket_size docs: boilerplate shingles whose pair blow-up is
+    quadratic) are excluded — the recall trade of the module docstring,
+    which raising max_bucket_size undoes; ``with_dropped=True`` also returns
+    them as an (anchor, n_docs) table (no silent caps).
+
+    The distinct (id, anchor) table feeds the bucket-size aggregate and the
+    bucket join; it is persisted so the anchor winnow UDF runs once per
+    corpus, not once per consumer (measured 163 s -> 29 s on the full
+    duplicate_spans query at sf0.1 — guide §5 "reused AND expensive to
+    recompute").  The candidate pair table is persisted too: its two
+    text-attach joins would otherwise re-run the whole anchor/pair chain
+    once per side.  Persisted handles are appended to ``cache_registry``
+    when given (the dedup pipeline's release discipline); without a
+    registry they stay cached for the session — the one-shot query path —
+    at MEMORY_AND_DISK, bounded by the narrow (id, anchor) row count
+    (~16 B/row, linear in corpus size).
     """
     base = docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
     if anchors is None:
         anchors = anchor_table(base, min_len, hash_type, seed, id_col="id")
-    pairs = substring_candidate_pairs(anchors, max_bucket_size, with_dropped,
-                                      cache_registry=cache_registry)
-    dropped = None
-    if with_dropped:
-        pairs, dropped = pairs
-    pairs = pairs.persist()
+    per_doc = anchors.select("id", "anchor").distinct().persist()
+    if cache_registry is not None:
+        cache_registry.append(per_doc)
+    out = self_pairs(per_doc, ["anchor"], "id", max_bucket_size, with_dropped, cache_registry)
+    pairs, dropped = out if with_dropped else (out, None)
+    pairs = pairs.distinct().persist()
     if cache_registry is not None:
         cache_registry.append(pairs)
     out = span_stats_for_pairs(pairs, base, min_len, max_spans_per_pair)
-    if with_dropped:
-        return out, dropped
-    return out
+    return (out, dropped) if with_dropped else out
 
 
 def substring_dup_pairs(

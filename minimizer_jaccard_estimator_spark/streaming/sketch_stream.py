@@ -182,19 +182,20 @@ def start_dedup_stream(
     latest row per (id_a, id_b) converges to the final-text verdict whenever
     arrivals eventually stop — re-verify at compaction for strict semantics.
 
-    Scale: with ``bands_sink`` set (the production path), the corpus band
-    table is maintained as its own incrementally-appended sink — each batch
-    appends only the changed conversations' (conv_id, band_id, band_hash)
-    rows (~24 B each) and the corpus-wide per-batch pass runs over THIN band
-    rows; the wide sketch sink is only read for the candidate ids' minimizer
-    arrays (semi-joined before the latest-row aggregation).  Without it,
-    bands are recomputed from the full sketch sink each batch (simple +
-    correct, but the per-batch corpus pass carries the wide signature rows
-    — fine for demos, quadratic-ish wall over a long stream).  Both paths
-    are equivalence-tested against the batch pipeline.
+    Scale: the corpus band table is its own incrementally-appended sink,
+    ``bands_sink`` (default ``<sketch_sink>__bands``): each batch appends
+    only the changed conversations' (conv_id, band_id, band_hash) rows
+    (~24 B each), which probe the current band view uncapped through the
+    delta's :func:`..operators.lsh.probe_pairs`, so the corpus-wide
+    per-batch pass runs over THIN band rows; the wide sketch sink is only
+    read for the candidate ids' minimizer arrays (semi-joined before the
+    latest-row aggregation).  Equivalence-tested against the batch pipeline.
     """
-    from ..operators.lsh import band_hashes
+    from ..operators.lsh import band_hashes, endpoint_ids, probe_pairs
     from ..operators.verify import verify_pairs
+
+    if bands_sink is None:
+        bands_sink = sketch_sink.rstrip("/") + "__bands"
 
     assembled = assemble_stream(turns, sep=sep, state_timeout_ms=state_timeout_ms)
 
@@ -210,21 +211,10 @@ def start_dedup_stream(
         # fresh rows ARE each updated conversation's latest sketch, so the
         # changed side's bands never need the corpus view
         nb = band_hashes(fresh.select("conv_id", "minhash"), cfg)
-        if bands_sink is not None:
-            nb.withColumn("batch_id", F.lit(batch_id).cast("long")) \
-                .write.mode("append").parquet(bands_sink)
-            ab = latest_bands(spark, bands_sink)
-        else:
-            ab = band_hashes(latest_sketches(spark, sketch_sink), cfg)
-        cand = (
-            nb.select("band_id", "band_hash", F.col("conv_id").alias("id_x"))
-            .join(ab.select("band_id", "band_hash", F.col("conv_id").alias("id_y")),
-                  ["band_id", "band_hash"])
-            .where(F.col("id_x") != F.col("id_y"))
-            .select(F.least("id_x", "id_y").alias("id_a"),
-                    F.greatest("id_x", "id_y").alias("id_b"))
-            .distinct()
-        )
+        nb.withColumn("batch_id", F.lit(batch_id).cast("long")) \
+            .write.mode("append").parquet(bands_sink)
+        cand = probe_pairs(nb, latest_bands(spark, bands_sink),
+                           ["band_id", "band_hash"], "conv_id", None).distinct()
         # also re-verify every PREVIOUSLY seen pair touching an updated
         # conversation: a diverged pair may no longer share any band, so the
         # band join alone would never re-examine (and thus never retract) it
@@ -244,10 +234,7 @@ def start_dedup_stream(
         # the wide sketch rows are only needed for ids that appear in a
         # candidate pair — semi-join before the latest-row aggregation so
         # the groupBy shuffles candidate sketches, not the whole corpus
-        cand_ids = cand.select(F.col("id_a").alias("conv_id")).union(
-            cand.select(F.col("id_b").alias("conv_id"))
-        ).distinct()
-        needed = latest_sketches(spark, sketch_sink, only_ids=cand_ids)
+        needed = latest_sketches(spark, sketch_sink, only_ids=endpoint_ids(cand))
         verified = verify_pairs(cand, needed.select("conv_id", "minimizers"))
         # write EVERY re-verified pair (accepted or not): the latest row per
         # pair is the current verdict, so a pair that later diverges below

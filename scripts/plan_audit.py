@@ -1,12 +1,18 @@
 #!/usr/bin/env python3
-"""Dump the physical plans of the headline queries to PLANS.md.
+"""Dump the physical plans of the headline queries to PLANS.md, or capture
+single declared queries' plans for a before/after diff.
 
 The scale-critical plan properties (pushdown, pruning, broadcast, no
 cartesian fallback, Arrow-not-pickle Python eval, no single-partition
 window) are ASSERTED in tests/test_plans.py; this script materializes the
 evidence for human review.
 
-Usage: python scripts/plan_audit.py [sf_dir]
+Usage: python scripts/plan_audit.py [sf_dir [suffix [query,query,...]]]
+
+With a ``suffix``, each query's ``explain('formatted')`` goes to
+``plans/r06/<query>_<suffix>.txt`` instead of PLANS.md (default queries:
+``CAPTURE``), e.g.
+``python scripts/plan_audit.py "$SPARK_GRAFT_SF_DIR" before ngram_jaccard,j1_pair_zip_join``.
 """
 
 from __future__ import annotations
@@ -21,6 +27,12 @@ import __spark_entry__ as entry_mod  # noqa: E402
 from minimizer_jaccard_estimator_spark.plans.session import get_spark  # noqa: E402
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+
+CAPTURE = [
+    "ngram_jaccard", "j1_pair_zip_join", "j3_word_jaccard",
+    "a1_multiset_count", "join_agg_revenue", "token_count",
+    "events_window", "minhash_lsh_candidates",
+]
 
 DELTA_NOTE = (
     "## delta ingestion plans (asserted, not dumped)\n\n"
@@ -62,10 +74,17 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().explainString(mode)
 
 
-def main() -> None:
-    spark = get_spark(app_name="plan-audit", cpus=8)
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = entry_mod.queries()
+def capture(spark, qs, suffix: str, names: list[str]) -> None:
+    out_dir = os.path.join(REPO, "plans", "r06")
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names:
+        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+        with open(path, "w") as fh:
+            fh.write(_plan(qs[name](spark, SF_DIR)))
+        print(f"wrote {path}", file=sys.stderr)
+
+
+def audit(spark, qs) -> None:
     out = [
         "# Physical-plan audit",
         "",
@@ -81,6 +100,17 @@ def main() -> None:
     with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(AUDIT)} plans)")
+
+
+def main() -> None:
+    spark = get_spark(app_name="plan-audit", cpus=8)
+    spark.sparkContext.setLogLevel("ERROR")
+    qs = entry_mod.queries()
+    if len(sys.argv) > 2:
+        capture(spark, qs, sys.argv[2],
+                sys.argv[3].split(",") if len(sys.argv) > 3 else CAPTURE)
+    else:
+        audit(spark, qs)
     spark.stop()
 
 

@@ -612,3 +612,51 @@ def test_attach_zip_equals_join(spark):
         cand, sk.select("conv_id", "minimizers"), attach="zip").collect()}
     assert pz == pj and pj
     sk.unpersist()
+
+
+def test_bucket_pair_core_probe_equals_self_pairs(spark):
+    """The two bucket-pair functions are one semantics: on a tiny (id, key)
+    table with a hot key, the probe of the new rows against old ∪ new equals
+    the all-vs-all self pairs that have a new endpoint, both equal a
+    brute-force answer, and the capped (dropped) buckets agree — uncapped
+    and at a cap of 3."""
+    from collections import Counter, defaultdict
+
+    from minimizer_jaccard_estimator_spark.operators.lsh import probe_pairs, self_pairs
+
+    rng = random.Random(17)
+    rows = set()
+    for i in range(40):
+        for _ in range(rng.randint(1, 4)):
+            # key (0, 0) is hot: ~30% of all rows land in it
+            g = 0 if rng.random() < 0.3 else rng.randint(1, 8)
+            rows.add((f"d{i:02d}", g, rng.randint(0, 4) if g else 0))
+    rows = sorted(rows)
+    new_ids = {f"d{i:02d}" for i in range(0, 40, 5)}
+    schema = "id string, g int, h long"
+    corpus = spark.createDataFrame(rows, schema)
+    new = spark.createDataFrame([r for r in rows if r[0] in new_ids], schema)
+    members = defaultdict(list)
+    for cid, g, h in rows:
+        members[(g, h)].append(cid)
+    touched = {(g, h) for cid, g, h in rows if cid in new_ids}
+    assert max(len(m) for m in members.values()) > 3, "fixture needs a hot key"
+
+    for cap in (None, 3):
+        kept = {k: m for k, m in members.items() if cap is None or len(m) <= cap}
+        want = Counter(p for m in kept.values() for p in itertools.combinations(sorted(m), 2))
+        want_dropped = {(*k, len(m)) for k, m in members.items() if k not in kept}
+        caches = []
+        sp, s_dropped = self_pairs(corpus, ["g", "h"], "id", cap, True, caches)
+        pp, p_dropped = probe_pairs(new, corpus, ["g", "h"], "id", cap, True, caches)
+        got_self = Counter((r.id_a, r.id_b) for r in sp.collect())
+        got_probe = {(r.id_a, r.id_b) for r in pp.collect()}
+        assert got_self == want, cap  # one pair per shared bucket
+        assert got_probe == {p for p in want if new_ids & set(p)}, cap
+        assert s_dropped.columns == p_dropped.columns == ["g", "h", "n_docs"]
+        got_s_dropped = {tuple(r) for r in s_dropped.collect()}
+        got_p_dropped = {tuple(r) for r in p_dropped.collect()}
+        assert got_s_dropped == want_dropped, cap
+        assert got_p_dropped == {d for d in want_dropped if d[:2] in touched}, cap
+        for df in caches:
+            df.unpersist()

@@ -134,15 +134,10 @@ def test_stream_incremental_updates_grow(spark, tmp_path):
     assert hist[1]["n_shingles"] > hist[0]["n_shingles"]
 
 
-import pytest
-
-
-@pytest.mark.parametrize("use_bands_sink", [False, True])
-def test_streaming_dedup_matches_batch_clusters(spark, tmp_path, use_bands_sink):
+def test_streaming_dedup_matches_batch_clusters(spark, tmp_path):
     """Streamed candidates+verify converge to the batch pipeline's accepted
-    pairs and clusters when conversations arrive whole (no partial growth).
-    Parametrized over both band-table paths: recompute-from-sketch-sink
-    (demo) and the incrementally-appended bands sink (production)."""
+    pairs and clusters when conversations arrive whole (no partial growth),
+    and the incrementally-appended bands sink holds the current bands."""
     import pyspark.sql.functions as F
 
     from minimizer_jaccard_estimator_spark.operators.connected_components import (
@@ -168,7 +163,7 @@ def test_streaming_dedup_matches_batch_clusters(spark, tmp_path, use_bands_sink)
     stream = spark.readStream.schema(TRANSCRIPT_SCHEMA).option(
         "maxFilesPerTrigger", "1"
     ).parquet(src)
-    bands_sink = str(tmp_path / "bands") if use_bands_sink else None
+    bands_sink = str(tmp_path / "bands")
     q = start_dedup_stream(spark, stream, CFG, sketch_sink, pairs_sink, ckpt,
                            jaccard_threshold=0.5, bands_sink=bands_sink)
     try:
@@ -176,24 +171,23 @@ def test_streaming_dedup_matches_batch_clusters(spark, tmp_path, use_bands_sink)
     finally:
         q.stop()
 
-    if use_bands_sink:
-        # the bands sink's current view must equal bands recomputed from the
-        # current sketches (the demo path's source of truth)
-        from minimizer_jaccard_estimator_spark.operators.lsh import band_hashes
-        from minimizer_jaccard_estimator_spark.streaming.sketch_stream import (
-            latest_bands,
-            latest_sketches,
-        )
+    # the bands sink's current view must equal bands recomputed from the
+    # current sketches (their source of truth)
+    from minimizer_jaccard_estimator_spark.operators.lsh import band_hashes
+    from minimizer_jaccard_estimator_spark.streaming.sketch_stream import (
+        latest_bands,
+        latest_sketches,
+    )
 
-        got_bands = {
-            (r.conv_id, r.band_id, r.band_hash)
-            for r in latest_bands(spark, bands_sink).collect()
-        }
-        want_bands = {
-            (r.conv_id, r.band_id, r.band_hash)
-            for r in band_hashes(latest_sketches(spark, sketch_sink), CFG).collect()
-        }
-        assert got_bands == want_bands
+    got_bands = {
+        (r.conv_id, r.band_id, r.band_hash)
+        for r in latest_bands(spark, bands_sink).collect()
+    }
+    want_bands = {
+        (r.conv_id, r.band_id, r.band_hash)
+        for r in band_hashes(latest_sketches(spark, sketch_sink), CFG).collect()
+    }
+    assert got_bands == want_bands
 
     stream_pairs = {
         (r.id_a, r.id_b)

@@ -188,6 +188,26 @@ def test_duplicate_spans_matches_kernel_exactly(spark):
         assert r.cov_b == st["cov_b"]
         assert r.longest == st["longest"]
 
+    # the anchor stage (the sketch UDF's minimizers + positions) equals the
+    # per-document winnow kernel, null / empty / multi-byte text included
+    from minimizer_jaccard_estimator_spark import kernels as K
+    from minimizer_jaccard_estimator_spark.operators.substring import (
+        anchor_params,
+        anchor_table,
+    )
+
+    edge = {"null": None, "empty": "", "unicode": "naïve café ☕ 深圳市南山区 " * 3}
+    texts = {**rows, **edge}
+    edge_df = spark.createDataFrame(list(edge.items()), "conv_id string, text string")
+    got = {cid: [] for cid in texts}
+    for r in anchor_table(docs.unionByName(edge_df), 20).collect():
+        got[r.id].append((r.anchor, r.pos))
+    k, w = anchor_params(20)
+    for cid, t in texts.items():
+        v, p = K.winnow_minimizers(K.hash_text_shingles(t or "", k), w)
+        assert got[cid] == list(zip(K.u64_to_i64(v).tolist(), p.tolist())), cid
+    assert not got["null"] and not got["empty"] and got["unicode"]
+
 
 def test_substring_dup_pairs_threshold(spark):
     from pyspark.sql import Row
