@@ -31,7 +31,7 @@ from .lsh import (
 )
 from .pairing import global_row_numbers
 from .substring import anchor_table, duplicate_spans, substring_dup_pairs
-from .verify import attach_pair_columns, verify_pairs, verify_pairs_staged
+from .verify import attach_pair_columns, verify_pairs
 
 
 @dataclass
@@ -64,12 +64,14 @@ class DedupConfig:
     # costs one text shuffle but removes the tail wave from the most
     # expensive stage (measured ~1.8x on the sketch stage at local[32])
     rebalance_sketch: bool = True
-    # staged verify: MinHash-agreement prefilter (~1KB/doc shuffled) before
-    # the exact minimizer-set verify (~10KB/doc).  APPROXIMATE: the margin
-    # budgets ~4 sigma of sampling noise (0.18 at num_perm=128) plus ~0.07
-    # for the minimizer estimator's positive bias vs the shingle Jaccard
-    # (see verify.py docstring); final accepts are always exact either way
+    # verify attach switch (the name is historical): True runs run_dedup's
+    # exact verify through attach_pair_columns_zip, one payload exchange for
+    # sketch tables too big to broadcast; False uses the join attach.  A
+    # delta's candidate-pruned sketch lookup always joins.  Scores are
+    # identical either way.
     staged_verify: bool = False
+    # ignored: the MinHash-agreement prefilter this margin tuned is gone
+    # (see verify.py); kept so existing configs and readers still work
     staged_verify_margin: float = 0.25
 
 
@@ -348,24 +350,17 @@ def run_dedup(
     # every candidate, accepted or not (resume/delta + declared-query
     # contract)
     def _verify(pair_df: DataFrame, min_score: float | None = None) -> DataFrame:
-        if cfg.staged_verify:
-            # staged verify exists for the big-payload regime (long texts →
-            # ~KB signatures, ~10x-KB minimizer arrays), where the per-doc
-            # tables outgrow any broadcast threshold; the zip attach ships
-            # each payload through ONE exchange instead of three (see
-            # attach_pair_columns_zip).  Its preconditions hold here: the
-            # pair stream is deduplicated on both branches (candidates is
-            # distinct; the clusters branch dropDuplicates right below) and
-            # sketch payloads are non-null.
-            return verify_pairs_staged(
-                pair_df,
-                sk_cols("minimizers", "minhash", "n_shingles"),
-                cfg.jaccard_threshold,
-                cfg.staged_verify_margin,
-                min_score=min_score,
-                attach="zip",
-            )
-        return verify_pairs(pair_df, sk_cols("minimizers"), min_score=min_score)
+        # staged_verify picks the zip attach, built for the big-payload regime
+        # (long texts → ~10x-KB minimizer arrays) where the per-doc table
+        # outgrows any broadcast threshold: each payload crosses ONE exchange
+        # instead of three (see attach_pair_columns_zip).  Its preconditions
+        # hold here: the pair stream is deduplicated on both branches
+        # (candidates is distinct; the clusters branch dropDuplicates right
+        # below) and sketch payloads are non-null.
+        return verify_pairs(
+            pair_df, sk_cols("minimizers"), min_score=min_score,
+            attach="zip" if cfg.staged_verify else "join",
+        )
 
     if store.exists("verified"):
         verified = store.load(spark, "verified")

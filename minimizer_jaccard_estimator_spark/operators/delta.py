@@ -55,7 +55,7 @@ from .dedup import (
 )
 from .lsh import band_hashes, endpoint_ids, probe_pairs, simhash_filter, text_digest
 from .substring import anchor_table, span_stats_for_pairs, substring_dup_pairs
-from .verify import attach_pair_columns, verify_pairs, verify_pairs_staged
+from .verify import attach_pair_columns, verify_pairs
 
 # candidate-id pushdown cap: at or below this many distinct candidate ids the
 # verify prune is an `isin` filter (post-scan InSet prune on the corpus
@@ -66,11 +66,14 @@ from .verify import attach_pair_columns, verify_pairs, verify_pairs_staged
 # parquet degrades large In lists to a min/max range filter).  MEASURED and
 # REVERTED in round 5: at 256 the typical delta (~1-3k candidate ids) falls
 # onto the semi-join path and the no-commit delta wall regresses 2.7x
-# (23-32 s vs 8.4-9.5 s at the DELTA_BENCH config, A/B'd same-session) —
-# the value of the literal list is the cheap post-scan InSet prune applied
-# on EVERY re-scan of the wide sketches table inside the staged-verify DAG,
-# which the semi-join (a join subtree re-evaluated per consumer) does not
-# give.  Plan-string bloat at <=10k ids is real but benign next to that.
+# (23-32 s vs 8.4-9.5 s at the DELTA_BENCH config, A/B'd same-session).
+# Those numbers were measured on the staged-verify DAG of the time, whose
+# MinHash prefilter and exact verify each joined the sketch lookup on both
+# pair sides.  The one verify joins it on both sides once, and the reason
+# holds there: the literal list is a cheap post-scan InSet prune applied on
+# every re-scan of the wide sketches table, which the semi-join (a join
+# subtree re-evaluated per consumer) does not give.  Plan-string bloat at
+# <=10k ids is real but benign next to that.
 _ID_PUSHDOWN_CAP = 10_000
 
 
@@ -400,9 +403,9 @@ def run_dedup_delta(
     # known and delta-sized, so prune the sketch lookup to it FIRST and cache
     # the (tiny) result: the corpus sketches table is then scanned once here
     # — with the id predicate pushed into the parquet scan when the id list
-    # is small enough to collect — instead of 2–4 full wide-array scans
+    # is small enough to collect — instead of two full wide-array scans
     # inside the verify joins (attach_pair_columns joins the per-doc table
-    # twice, and staged verify does that twice over).
+    # once per pair side).
     cand_ids = endpoint_ids(candidates).persist()
     caches.append(cand_ids)
     id_sample = cand_ids.limit(_ID_PUSHDOWN_CAP + 1).collect()
@@ -413,13 +416,7 @@ def run_dedup_delta(
     ver_sk = ver_sk.persist()
     caches.append(ver_sk)
 
-    if cfg.staged_verify:
-        verified = verify_pairs_staged(
-            candidates, ver_sk.select("conv_id", "minimizers", "minhash", "n_shingles"),
-            cfg.jaccard_threshold, cfg.staged_verify_margin,
-        )
-    else:
-        verified = verify_pairs(candidates, ver_sk.select("conv_id", "minimizers"))
+    verified = verify_pairs(candidates, ver_sk.select("conv_id", "minimizers"))
 
     if commit:
         verified = store.materialize(spark, "delta_verified", verified,

@@ -4,6 +4,14 @@ Reference semantics J3/J4 (``jaccard_by_kmers`` / ``jaccard_by_minimizers``,
 ``jaccard_correction_test.py:786-852``) as pure DataFrame expressions:
 I = |array_intersect|, U = |A| + |B| − I, J = I/U (0 when U = 0).  Stays
 entirely JVM-side (whole-stage codegen) — no Python in the verify hot path.
+
+:func:`verify_pairs` is the engine's one scorer (batch, delta, streaming and
+the entry queries).  Its only pruning is the exact ``min_score`` size gate:
+no pair whose minimizer Jaccard can reach ``min_score`` is dropped.  A
+MinHash-agreement prefilter cannot promise that — agreement estimates the
+SHINGLE Jaccard, and the minimizer estimator's bias above it does not shrink
+with sequence length — so there is none.  The attach form (join or zip) only
+changes the plan, never the rows.
 """
 
 from __future__ import annotations
@@ -98,63 +106,6 @@ def attach_pair_columns_zip(
     return out.where(cond)
 
 
-def verify_pairs_staged(
-    candidates: DataFrame,
-    sketches: DataFrame,
-    threshold: float,
-    margin: float = 0.2,
-    id_col: str = "conv_id",
-    set_col: str = "minimizers",
-    sig_col: str = "minhash",
-    size_col: str = "n_shingles",
-    small_doc_bypass: int = 1024,
-    min_score: float | None = None,
-    attach: str = "join",
-) -> DataFrame:
-    """Two-stage verify: signature-estimate filter, then exact minimizer
-    Jaccard on the survivors.  Output schema == verify_pairs (survivors
-    only); final accept decisions remain exact.
-
-    APPROXIMATE, not provably recall-safe: the default ``margin`` (0.25 via
-    DedupConfig) budgets ~4 sigma of MinHash sampling noise (0.18 at
-    num_perm=128) PLUS an allowance for the winnowed-minimizer estimator's
-    positive bias — j_sig tracks the shingle Jaccard while the accept test
-    uses the minimizer Jaccard, which sits a few percent above it (that gap
-    is exactly what correction.py's Bias statistic measures; it grows with
-    w/L).  A borderline pair whose minimizer bias exceeds the allowance can
-    still be dropped; use plain verify_pairs when exactness of the candidate
-    set matters more than the ~10x verify-shuffle saving.
-
-    The sigma bound on j_sig also assumes (near-)independent signature
-    slots; densified-OPH slots are correlated when a document has few
-    distinct fingerprints (measured std ~2x the binomial bound at ~20
-    fingerprints).  Pairs where either side has fewer than
-    ``small_doc_bypass`` shingles therefore skip the prefilter and go
-    straight to exact verification — they are exactly the pairs where the
-    prefilter saves nothing anyway.  Set ``small_doc_bypass=0`` to disable
-    (safe for the seeded scheme).
-    """
-    use_bypass = bool(small_doc_bypass) and size_col in sketches.columns
-    cols = [sig_col, size_col] if use_bypass else [sig_col]
-    _attach = attach_pair_columns_zip if attach == "zip" else attach_pair_columns
-    joined = _attach(
-        candidates, sketches.select(id_col, *cols), cols, id_col
-    )
-    a, b = f"{sig_col}_a", f"{sig_col}_b"
-    agree = F.size(F.filter(F.zip_with(a, b, lambda x, y: x == y), lambda eq: eq))
-    keep = (agree / F.size(a)) >= F.lit(max(0.0, threshold - margin))
-    if use_bypass:
-        keep = keep | (
-            F.least(F.col(f"{size_col}_a"), F.col(f"{size_col}_b"))
-            < F.lit(small_doc_bypass)
-        )
-    plausible = joined.where(keep)
-    return verify_pairs(
-        plausible.select("id_a", "id_b"), sketches.select(id_col, set_col),
-        id_col, set_col, min_score=min_score, attach=attach,
-    )
-
-
 def verify_pairs(
     candidates: DataFrame,
     sketches: DataFrame,
@@ -205,3 +156,13 @@ def verify_pairs(
         u.alias("u_mini"),
         F.when(u == 0, F.lit(0.0)).otherwise(i / u).alias("j_mini"),
     )
+
+
+def verify_pairs_staged(
+    candidates: DataFrame, sketches: DataFrame, threshold: float | None = None,
+    margin: float | None = None, *, min_score: float | None = None, attach: str = "join",
+) -> DataFrame:
+    """Deprecated alias: :func:`verify_pairs` on ``conv_id``/``minimizers``.
+    The MinHash-agreement prefilter it ran is gone, so ``threshold`` and
+    ``margin`` are ignored."""
+    return verify_pairs(candidates, sketches, min_score=min_score, attach=attach)

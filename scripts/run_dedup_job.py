@@ -14,6 +14,12 @@ verified, spans, clusters) under --output; re-running with --resume picks up
 after the last completed stage.  Per-stage row counts + wall times land in
 ``<output>/_metrics`` — the pipeline's lineage record.
 
+``--staged-verify`` runs the batch pass's exact verify through the zip
+attach (each sketch payload crosses one exchange instead of three; for
+sketch tables too big to broadcast; a --delta run's candidate-pruned lookup
+joins either way).  The name is historical: there is no prefilter, and the
+scores are the same as without it.
+
 ``--delta`` is the production ingestion loop: --input holds ONLY the new
 conversations, which are deduped against the corpus already checkpointed
 under --output (probing its incremental digests/bands tables — O(delta)
@@ -51,8 +57,9 @@ def main() -> None:
     ap.add_argument("--simhash-max-hamming", type=int, default=None)
     ap.add_argument("--substring-min-len", type=int, default=None)
     ap.add_argument("--staged-verify", action="store_true",
-                    help="MinHash-agreement prefilter before the exact "
-                         "minimizer verify (final accepts stay exact)")
+                    help="verify through the zip attach (one payload "
+                         "exchange; for sketch tables too big to broadcast). "
+                         "Scores are unchanged")
     ap.add_argument("--resume", action="store_true",
                     help="reuse completed stage tables under --output")
     ap.add_argument("--overwrite", action="store_true",

@@ -107,6 +107,8 @@ if stage == "sketch":
 else:
     for _ in range(reps):
         t0 = time.monotonic()
+        # SB_STAGED_VERIFY=1: verify through the zip attach (one payload
+        # exchange); the name is historical, there is no prefilter
         staged = os.environ.get("SB_STAGED_VERIFY", "0") == "1"
         # SB_REBALANCE=0: skip the pre-sketch round-robin text shuffle — the
         # right setting for cheap (OPH) sketches, where the shuffle costs

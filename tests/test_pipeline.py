@@ -335,18 +335,89 @@ def test_dedup_recall_with_oph_candidates(spark):
     assert precision >= 0.95, f"oph dup-pair precision {precision:.4f}"
 
 
-def test_staged_verify_matches_exact_clusters(spark):
-    """Staged verify (signature prefilter) must yield the same accepted
-    clusters as the exact path at the same threshold."""
-    t = synthetic_transcripts(spark, n_base=50, dup_factor=2, seed=13)
-    exact = run_dedup(spark, t, DedupConfig(sketch=SKETCH, jaccard_threshold=THETA))
-    staged = run_dedup(
-        spark, t,
-        DedupConfig(sketch=SKETCH, jaccard_threshold=THETA, staged_verify=True),
+def _borderline_pair(cfg: SketchConfig, theta: float) -> tuple[str, str]:
+    """Two texts, both of at least 1024 shingles, whose exact minimizer
+    Jaccard is >= ``theta`` while their MinHash agreement is below it.
+
+    Agreement estimates the SHINGLE Jaccard and the minimizer Jaccard sits
+    above it, so a signature prefilter at margin 0 drops such a pair, and
+    at 1024+ shingles no small-document exemption would save it.  Found by
+    a seeded search over word-substitution mutants.
+    """
+    seeds = cfg.seeds()
+
+    def sketch(text):
+        h = cfg.hash_sequence(text)
+        minis = np.unique(K.winnow_minimizers(h, cfg.w)[0])
+        return minis, cfg.minhash(cfg.fingerprints(text), seeds), h.shape[0]
+
+    for seed in range(1000):
+        rng = random.Random(f"borderline:{seed}")
+        vocab = ["".join(rng.choice("abcdefghijklmnopqrstuvwxyz")
+                         for _ in range(rng.randint(3, 10))) for _ in range(500)]
+        words = [rng.choice(vocab) for _ in range(300)]
+        a = " ".join(words)
+        b = " ".join(rng.choice(vocab) if rng.random() < 0.1 else w for w in words)
+        (ma, sa, na), (mb, sb, nb) = sketch(a), sketch(b)
+        inter = np.intersect1d(ma, mb, assume_unique=True).shape[0]
+        j_mini = inter / (ma.shape[0] + mb.shape[0] - inter)
+        if min(na, nb) >= 1024 and j_mini >= theta and np.mean(sa == sb) < theta:
+            return a, b
+    raise AssertionError("no borderline pair in 1000 seeds")
+
+
+def test_staged_verify_matches_exact_clusters(spark, tmp_path):
+    """``staged_verify`` only switches the verify attach to the zip form:
+    clusters and ``verified`` equal the join-attach run, and every candidate
+    is scored in store runs and committed deltas.  The corpus carries a
+    planted borderline pair (see _borderline_pair) that an approximate
+    MinHash prefilter would drop."""
+    import dataclasses
+    import datetime
+
+    from minimizer_jaccard_estimator_spark.operators.delta import run_dedup_delta
+    from minimizer_jaccard_estimator_spark.sources.transcripts import TRANSCRIPT_SCHEMA
+
+    oph = dataclasses.replace(SKETCH, minhash_scheme="oph")
+    text_a, text_b = _borderline_pair(oph, THETA)
+    ts = datetime.datetime(2026, 1, 1)
+    planted = spark.createDataFrame(
+        [("p_a", 0, "user", text_a, None, ts), ("p_b", 0, "user", text_b, None, ts)],
+        TRANSCRIPT_SCHEMA,
     )
+    t = synthetic_transcripts(spark, n_base=50, dup_factor=2, seed=13).union(planted).cache()
+    exact_cfg = DedupConfig(sketch=oph, jaccard_threshold=THETA)
+    staged_cfg = dataclasses.replace(exact_cfg, staged_verify=True, staged_verify_margin=0.0)
+
+    def pairs(df):
+        return sorted((r["id_a"], r["id_b"]) for r in df.collect())
+
+    exact = run_dedup(spark, t, exact_cfg)
+    staged = run_dedup(spark, t, staged_cfg)
     ce = {r["conv_id"]: r["cluster_id"] for r in exact.clusters.collect()}
     cs = {r["conv_id"]: r["cluster_id"] for r in staged.clusters.collect()}
     assert ce == cs
+    assert ce["p_a"] == ce["p_b"]
+    scored = sorted(tuple(r) for r in exact.verified.collect())
+    assert sorted(tuple(r) for r in staged.verified.collect()) == scored
+    assert ("p_a", "p_b") in {r[:2] for r in scored}
+    exact.release()
+    staged.release()
+
+    full = StageStore(root=str(tmp_path / "full"))
+    run_dedup(spark, t, staged_cfg, store=full).release()
+    cand = pairs(full.load(spark, "candidates"))
+    assert ("p_a", "p_b") in cand
+    assert pairs(full.load(spark, "verified")) == cand
+
+    is_new = F.col("conv_id").endswith("3") | (F.col("conv_id") == "p_b")
+    base = StageStore(root=str(tmp_path / "base"))
+    run_dedup(spark, t.where(~is_new), staged_cfg, store=base).release()
+    run_dedup_delta(spark, t.where(is_new), staged_cfg, base, commit=True).release()
+    delta_cand = pairs(base.load(spark, "delta_candidates"))
+    assert ("p_a", "p_b") in delta_cand
+    assert pairs(base.load(spark, "delta_verified")) == delta_cand
+    t.unpersist()
 
 
 def test_partition_metrics_and_dropped_buckets(spark, tmp_path):
@@ -583,15 +654,22 @@ def test_global_row_numbers_string_keys_ranged(spark):
 
 
 def test_attach_zip_equals_join(spark):
-    """attach='zip' (one payload exchange) must reproduce the join-form
-    staged verify exactly — including inner-join drop of ids with no sketch
-    row — on a corpus with dup structure."""
+    """attach_pair_columns_zip (one payload exchange) reproduces the join
+    form exactly on two payload columns — including the inner-join drop of
+    ids with no sketch row — and so does verify_pairs under either attach,
+    on a corpus with dup structure.  The deprecated verify_pairs_staged name
+    forwards to verify_pairs."""
     from minimizer_jaccard_estimator_spark.functions.sketch import add_full_sketch
     from minimizer_jaccard_estimator_spark.operators.lsh import lsh_candidate_pairs
     from minimizer_jaccard_estimator_spark.operators.verify import (
+        attach_pair_columns,
+        attach_pair_columns_zip,
         verify_pairs,
         verify_pairs_staged,
     )
+
+    def rows(df):
+        return {tuple(tuple(v) if isinstance(v, list) else v for v in r) for r in df.collect()}
 
     t = synthetic_transcripts(spark, n_base=60, dup_factor=2, seed=11)
     ct = assemble_conversations(t)
@@ -599,18 +677,22 @@ def test_attach_zip_equals_join(spark):
     cand = lsh_candidate_pairs(sk.select("conv_id", "minhash"), SKETCH)
     # plant a pair whose ids have no sketch rows: both attach forms must drop it
     cand = cand.union(spark.createDataFrame([("zz1", "zz2")], ["id_a", "id_b"]))
-    args = (cand, sk.select("conv_id", "minimizers", "minhash", "n_shingles"),
-            THETA, 0.25)
-    join_rows = {tuple(r) for r in
-                 verify_pairs_staged(*args, attach="join").collect()}
-    zip_rows = {tuple(r) for r in
-                verify_pairs_staged(*args, attach="zip").collect()}
+    payload = ["minhash", "n_shingles"]
+    out = ["id_a", "id_b", "minhash_a", "minhash_b", "n_shingles_a", "n_shingles_b"]
+    per_doc = sk.select("conv_id", *payload)
+    join_rows = rows(attach_pair_columns(cand, per_doc, payload).select(*out))
+    zip_rows = rows(attach_pair_columns_zip(cand, per_doc, payload).select(*out))
     assert zip_rows == join_rows and join_rows
-    pj = {tuple(r) for r in verify_pairs(
-        cand, sk.select("conv_id", "minimizers"), attach="join").collect()}
-    pz = {tuple(r) for r in verify_pairs(
-        cand, sk.select("conv_id", "minimizers"), attach="zip").collect()}
+    assert ("zz1", "zz2") not in {r[:2] for r in join_rows}
+
+    minis = sk.select("conv_id", "minimizers")
+    pj = rows(verify_pairs(cand, minis, attach="join"))
+    pz = rows(verify_pairs(cand, minis, attach="zip"))
     assert pz == pj and pj
+    gated = rows(verify_pairs(cand, minis, min_score=0.5, attach="zip"))
+    # the sketch columns the perfbench trace passes to the old name
+    traced = sk.select("conv_id", "minimizers", "minhash", "n_shingles")
+    assert rows(verify_pairs_staged(cand, traced, 0.5, 0.25, min_score=0.5, attach="zip")) == gated
     sk.unpersist()
 
 
