@@ -39,6 +39,14 @@ class DedupConfig:
     sketch: SketchConfig = SketchConfig()
     jaccard_threshold: float = 0.5
     simhash_max_hamming: int | None = None  # None => prefilter off
+    # LSH bucket cap: buckets wider than this are excluded and recorded
+    # (lsh_dropped_buckets), never silently dropped; exact duplicates still
+    # link through the digest path.  The delta and streaming evaluate the
+    # cap at ingest time over exact global counts of the buckets a batch
+    # touches: a bucket that crosses the cap at a LATER batch keeps the
+    # links committed earlier (a full recompute would drop them), and the
+    # crossing is recorded in that batch's dropped-buckets table
+    # (delta_lsh_dropped_buckets, <sketch_sink>__dropped_buckets).
     max_bucket_size: int | None = 1000
     salt_partitions: int | None = None  # explicit salted repartition of turns
     # suffix-array substring pass (north_rule): also link pairs whose exact

@@ -19,6 +19,11 @@ cluster this runs with RocksDB state store + watermark-based state TTL
 (``state_timeout_ms``); sinks are per-batch appends with ``batch_id`` so the
 "current" view is ``max_by(*, batch_id) group by conv_id`` — an upsert
 without requiring a table format with row-level updates.
+
+Dedup (:func:`start_dedup_stream`) runs each micro-batch as a delta: the
+changed conversations go through the delta's new-vs-corpus core (exact-digest
+anchors, capped band probe, exact verify), and verdict rows carry ``exact``
+(the two current digests are equal), which retracts with ``j_mini``.
 """
 
 from __future__ import annotations
@@ -29,27 +34,17 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from ..functions.sketch import SketchConfig, add_full_sketch
+from ..operators.dedup import DedupConfig
+from ..operators.delta import probe_and_verify
+from ..operators.lsh import band_hashes, endpoint_ids, text_digest
+from ..operators.verify import attach_pair_columns
 
 # state: accumulated turns of one conversation
 _STATE_SCHEMA = "turn_idxs array<int>, texts array<string>"
 
-ASSEMBLED_SCHEMA = StructType(
-    [
-        StructField("conv_id", StringType()),
-        StructField("n_turns", IntegerType()),
-        StructField("text", StringType()),
-        StructField("text_len", LongType()),
-    ]
-)
+ASSEMBLED_SCHEMA = "conv_id string, n_turns int, text string, text_len long"
 
 
 def _assemble_func(sep: str, timeout_ms: int | None):
@@ -142,16 +137,22 @@ def start_sketch_stream(
     the micro-batch id; :func:`latest_sketches` reads back the current view.
     Returns the StreamingQuery (caller awaits/stops).
     """
-    assembled = assemble_stream(turns, sep=sep, state_timeout_ms=state_timeout_ms)
-
     def emit(batch_df: DataFrame, batch_id: int) -> None:
         out = add_full_sketch(batch_df, cfg).drop("text").withColumn(
             "batch_id", F.lit(batch_id).cast("long")
         )
         out.write.mode("append").parquet(sink_path)
 
+    return _start(turns, emit, checkpoint_path, sep, state_timeout_ms)
+
+
+def _start(turns: DataFrame, emit, checkpoint_path: str, sep: str,
+           state_timeout_ms: int | None):
+    """Stateful assembly of ``turns`` -> ``emit(batch_df, batch_id)`` per
+    micro-batch; returns the StreamingQuery."""
     return (
-        assembled.writeStream.foreachBatch(emit)
+        assemble_stream(turns, sep=sep, state_timeout_ms=state_timeout_ms)
+        .writeStream.foreachBatch(emit)
         .outputMode("update")
         .option("checkpointLocation", checkpoint_path)
         .start()
@@ -161,153 +162,133 @@ def start_sketch_stream(
 def start_dedup_stream(
     spark: SparkSession,
     turns: DataFrame,
-    cfg: SketchConfig,
+    cfg: DedupConfig,
     sketch_sink: str,
     pairs_sink: str,
     checkpoint_path: str,
-    jaccard_threshold: float = 0.5,
     sep: str = "\n",
     state_timeout_ms: int | None = None,
-    bands_sink: str | None = None,
 ):
-    """Streaming near-dup detection: per micro-batch, refresh sketches for
-    changed conversations, generate LSH candidates of those conversations
-    against the WHOLE corpus seen so far, verify with exact minimizer
-    Jaccard, and append every re-verified pair with its batch id.
+    """Streaming near-dup detection, each micro-batch a delta: refresh the
+    sketches and digests of changed conversations, then run the delta's core
+    (:func:`..operators.delta.probe_and_verify`) against the WHOLE corpus
+    seen so far and append every verdict, one row per pair per batch:
+    ``(id_a, id_b, i_mini, u_mini, j_mini, exact, batch_id)``, ``exact``
+    meaning the two CURRENT digests are equal.  A grown conversation's prior
+    pairs are all re-verified (``j_mini`` and ``exact`` retract together)
+    and its prior exact partners are probed again, so a digest group whose
+    star anchor grew out of it stays linked.  :func:`latest_accepted_pairs`
+    + connected components give the clusters.
 
-    ``latest_accepted_pairs`` + batch connected components give the cluster
-    view at any time.  Note on staleness: a pair accepted in batch b reflects
-    both sides' text as of b; if a conversation keeps growing, its pairs are
-    re-generated on every later update (it re-enters the changed set), so the
-    latest row per (id_a, id_b) converges to the final-text verdict whenever
-    arrivals eventually stop — re-verify at compaction for strict semantics.
-
-    Scale: the corpus band table is its own incrementally-appended sink,
-    ``bands_sink`` (default ``<sketch_sink>__bands``): each batch appends
-    only the changed conversations' (conv_id, band_id, band_hash) rows
-    (~24 B each), which probe the current band view uncapped through the
-    delta's :func:`..operators.lsh.probe_pairs`, so the corpus-wide
-    per-batch pass runs over THIN band rows; the wide sketch sink is only
-    read for the candidate ids' minimizer arrays (semi-joined before the
-    latest-row aggregation).  Equivalence-tested against the batch pipeline.
-    """
-    from ..operators.lsh import band_hashes, endpoint_ids, probe_pairs
-    from ..operators.verify import verify_pairs
-
-    if bands_sink is None:
-        bands_sink = sketch_sink.rstrip("/") + "__bands"
-
-    assembled = assemble_stream(turns, sep=sep, state_timeout_ms=state_timeout_ms)
+    Derived sinks: ``<sketch_sink>__bands`` (changed conversations' ~24 B
+    band rows: the per-batch corpus-wide passes run over thin band and
+    digest rows, wide sketch rows are read for candidate ids only) and
+    ``<sketch_sink>__dropped_buckets`` (buckets over ``cfg.max_bucket_size``
+    with ``batch_id``; as in the delta, the cap is evaluated at ingest
+    time).  Streaming keeps no text: ``cfg.substring_min_len`` must be None."""
+    if cfg.substring_min_len is not None:
+        raise ValueError("streaming has no conversation text for the substring "
+                         "pass: use a config with substring_min_len=None")
+    bands_sink = sketch_sink.rstrip("/") + "__bands"
+    dropped_sink = sketch_sink.rstrip("/") + "__dropped_buckets"
+    lookup = ["conv_id", "minimizers"] + (["simhash"] if cfg.simhash_max_hamming is not None else [])
 
     def emit(batch_df: DataFrame, batch_id: int) -> None:
-        # persist: three actions consume fresh per batch (sketch-sink write,
-        # bands write/join, the verify side) — without it each action re-runs
-        # the per-byte sketch UDF, tripling the dominant per-batch compute
-        fresh = add_full_sketch(batch_df, cfg).drop("text").withColumn(
-            "batch_id", F.lit(batch_id).cast("long")
-        ).persist()
+        stamp = F.lit(batch_id).cast("long").alias("batch_id")
+        # persist: the sketch-sink and bands writes both read fresh —
+        # without it each re-runs the per-byte sketch UDF
+        fresh = add_full_sketch(batch_df, cfg.sketch).withColumn(
+            "digest", text_digest(F.col("text"))).drop("text").select("*", stamp).persist()
         fresh.write.mode("append").parquet(sketch_sink)
-        new_ids = fresh.select("conv_id")
-        # fresh rows ARE each updated conversation's latest sketch, so the
-        # changed side's bands never need the corpus view
-        nb = band_hashes(fresh.select("conv_id", "minhash"), cfg)
-        nb.withColumn("batch_id", F.lit(batch_id).cast("long")) \
+        band_hashes(fresh.select("conv_id", "minhash"), cfg.sketch).select("*", stamp) \
             .write.mode("append").parquet(bands_sink)
-        cand = probe_pairs(nb, latest_bands(spark, bands_sink),
-                           ["band_id", "band_hash"], "conv_id", None).distinct()
-        # also re-verify every PREVIOUSLY seen pair touching an updated
-        # conversation: a diverged pair may no longer share any band, so the
-        # band join alone would never re-examine (and thus never retract) it
-        from pyspark.errors import AnalysisException
+        sketches = spark.read.parquet(sketch_sink)
+        # the current digests (thin) feed both probe sides and the exact flag
+        digests = _latest(sketches.select("conv_id", "digest", "batch_id")).persist()
+        probe, prior = fresh.select("conv_id"), _read(spark, pairs_sink)
+        caches = [fresh, digests]
+        if prior is not None:
+            # every prior pair touching an updated conversation is
+            # re-verified (a diverged pair may no longer share any band), and
+            # its exact partners are probed again (the star anchor of their
+            # digest group may be the conversation that changed)
+            prior = prior.join(probe.select(F.col("conv_id").alias("id_a")), "id_a").unionByName(
+                prior.join(probe.select(F.col("conv_id").alias("id_b")), "id_b"))
+            probe = probe.union(endpoint_ids(prior.where("exact"))).distinct().persist()
+            caches.append(probe)
+            prior = prior.select("id_a", "id_b")
+        bands = latest_bands(spark, bands_sink)
+        _, _, verified, dropped = probe_and_verify(
+            digests.join(probe, "conv_id", "leftsemi"), bands.join(probe, "conv_id", "leftsemi"),
+            digests.join(probe, "conv_id", "left_anti"), bands.join(probe, "conv_id", "left_anti"),
+            _latest(sketches.select(*lookup, "batch_id")), cfg, caches, reverify=prior,
+        )
+        if dropped is not None:
+            dropped.select("*", stamp).write.mode("append").parquet(dropped_sink)
+        # the latest row per pair is the current verdict, so a pair that
+        # later diverges is retracted at read time instead of living forever
+        attach_pair_columns(verified, digests, ["digest"]).select(
+            "id_a", "id_b", "i_mini", "u_mini", "j_mini",
+            (F.col("digest_a") == F.col("digest_b")).alias("exact"), stamp,
+        ).write.mode("append").parquet(pairs_sink)
+        for df in caches:
+            df.unpersist()
 
-        try:
-            prior = spark.read.parquet(pairs_sink).select("id_a", "id_b")
-            touched = prior.join(
-                new_ids.select(F.col("conv_id").alias("id_a")), "id_a"
-            ).union(
-                prior.join(new_ids.select(F.col("conv_id").alias("id_b")), "id_b")
-                .select("id_a", "id_b")
-            )
-            cand = cand.union(touched).distinct()
-        except AnalysisException:
-            pass  # first batch: no pairs sink yet
-        # the wide sketch rows are only needed for ids that appear in a
-        # candidate pair — semi-join before the latest-row aggregation so
-        # the groupBy shuffles candidate sketches, not the whole corpus
-        needed = latest_sketches(spark, sketch_sink, only_ids=endpoint_ids(cand))
-        verified = verify_pairs(cand, needed.select("conv_id", "minimizers"))
-        # write EVERY re-verified pair (accepted or not): the latest row per
-        # pair is the current verdict, so a pair that later diverges below
-        # the threshold is retracted at read time instead of living forever
-        verified.withColumn("batch_id", F.lit(batch_id).cast("long")).write.mode(
-            "append"
-        ).parquet(pairs_sink)
-        fresh.unpersist()
-
-    return (
-        assembled.writeStream.foreachBatch(emit)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_path)
-        .start()
-    )
+    return _start(turns, emit, checkpoint_path, sep, state_timeout_ms)
 
 
-def latest_verified_pairs(spark: SparkSession, pairs_sink: str) -> DataFrame:
-    """Latest verdict per (id_a, id_b) from the streaming pairs sink.
-
-    Missing sink (no batch emitted yet) => empty result; detection goes
-    through the reader so hdfs/s3a URIs work (os.path would silently report
-    missing and return nothing forever)."""
+def _read(spark: SparkSession, path: str) -> DataFrame | None:
+    """The parquet sink at ``path``, or None before its first batch (asked
+    of the reader, so hdfs/s3a URIs work where os.path reports missing)."""
     from pyspark.errors import AnalysisException
 
     try:
-        df = spark.read.parquet(pairs_sink)
+        return spark.read.parquet(path)
     except AnalysisException:
-        return spark.createDataFrame([], "id_a string, id_b string, j_mini double")
-    return (
-        df.groupBy("id_a", "id_b")
-        .agg(F.max_by(F.col("j_mini"), F.col("batch_id")).alias("j_mini"))
-    )
+        return None
+
+
+def _latest(df: DataFrame, keys: tuple[str, ...] = ("conv_id",)) -> DataFrame:
+    """The highest-batch_id row per ``keys`` of an append-only sink (ties
+    impossible: one emission per key per batch).  A filter on ``keys``
+    pushes below the aggregation into the parquet scan."""
+    cols = [c for c in df.columns if c not in (*keys, "batch_id")]
+    agg = df.groupBy(*keys).agg(F.max_by(F.struct(*cols), F.col("batch_id")).alias("_s"))
+    return agg.select(*keys, *[F.col(f"_s.{c}").alias(c) for c in cols])
+
+
+def latest_verified_pairs(spark: SparkSession, pairs_sink: str) -> DataFrame:
+    """Latest verdict per (id_a, id_b) from the streaming pairs sink; empty
+    before the first batch."""
+    df = _read(spark, pairs_sink)
+    if df is None:
+        return spark.createDataFrame([], "id_a string, id_b string, i_mini long, "
+                                         "u_mini long, j_mini double, exact boolean")
+    return _latest(df, ("id_a", "id_b"))
 
 
 def latest_accepted_pairs(
     spark: SparkSession, pairs_sink: str, threshold: float = 0.5
 ) -> DataFrame:
-    """Pairs whose LATEST verdict clears the threshold (retraction-aware)."""
+    """Pairs whose LATEST verdict clears the threshold or is exact
+    (retraction-aware)."""
     return latest_verified_pairs(spark, pairs_sink).where(
-        F.col("j_mini") >= F.lit(threshold)
+        (F.col("j_mini") >= F.lit(threshold)) | F.col("exact")
     )
 
 
-def latest_sketches(
-    spark: SparkSession, sink_path: str, only_ids: DataFrame | None = None
-) -> DataFrame:
-    """Current sketch per conversation = row with the highest batch_id
-    (ties impossible: one emission per conv per batch).  ``only_ids``
-    (a (conv_id) DataFrame) restricts the view BEFORE the latest-row
-    aggregation — the shuffle then carries only the requested
-    conversations' wide rows, not the whole corpus."""
-    df = spark.read.parquet(sink_path)
-    if only_ids is not None:
-        df = df.join(only_ids.select("conv_id"), "conv_id")
-    cols = [c for c in df.columns if c not in ("conv_id", "batch_id")]
-    agg = df.groupBy("conv_id").agg(
-        F.max_by(F.struct(*cols), F.col("batch_id")).alias("_s")
-    )
-    return agg.select("conv_id", *[F.col(f"_s.{c}").alias(c) for c in cols])
+def latest_sketches(spark: SparkSession, sink_path: str) -> DataFrame:
+    """Current sketch per conversation = row with the highest batch_id."""
+    return _latest(spark.read.parquet(sink_path))
 
 
 def latest_bands(spark: SparkSession, bands_sink: str) -> DataFrame:
     """Current (conv_id, band_id, band_hash) corpus band table from the
-    incrementally-appended bands sink: a conversation's band set is replaced
-    wholesale whenever it re-emits, so the current view keeps only its
-    highest-batch_id rows.  Thin rows (~24 B) — this is the per-batch
-    corpus-wide pass of the streaming dedup's production path."""
-    df = spark.read.parquet(bands_sink)
-    latest = df.groupBy("conv_id").agg(F.max("batch_id").alias("batch_id"))
-    return df.join(latest, ["conv_id", "batch_id"]).select(
-        "conv_id", "band_id", "band_hash"
-    )
+    incrementally-appended bands sink: every emission writes all of a
+    conversation's bands, so the latest row per (conv_id, band_id) is its
+    current band.  Thin rows (~24 B) — this is the per-batch corpus-wide
+    pass of the streaming dedup's production path."""
+    return _latest(spark.read.parquet(bands_sink), ("conv_id", "band_id"))
 
 
 def compact_sink(spark: SparkSession, sink_path: str,

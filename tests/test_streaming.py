@@ -135,17 +135,23 @@ def test_stream_incremental_updates_grow(spark, tmp_path):
 
 
 def test_streaming_dedup_matches_batch_clusters(spark, tmp_path):
-    """Streamed candidates+verify converge to the batch pipeline's accepted
-    pairs and clusters when conversations arrive whole (no partial growth),
-    and the incrementally-appended bands sink holds the current bands."""
+    """Streamed micro-batch deltas converge to the batch pipeline's accepted
+    pairs and clusters, in both directions, on a corpus with texts shorter
+    than k, more byte-identical copies than the bucket cap, and an exact
+    group whose star anchor grows out of it; the bands sink holds the
+    current bands and the capped bucket is recorded."""
     import pyspark.sql.functions as F
 
     from minimizer_jaccard_estimator_spark.operators.connected_components import (
         connected_components,
     )
     from minimizer_jaccard_estimator_spark.operators.dedup import DedupConfig, run_dedup
+    from minimizer_jaccard_estimator_spark.operators.lsh import band_hashes, exact_dup_pairs
     from minimizer_jaccard_estimator_spark.streaming.sketch_stream import (
         latest_accepted_pairs,
+        latest_bands,
+        latest_sketches,
+        latest_verified_pairs,
         start_dedup_stream,
     )
 
@@ -153,19 +159,36 @@ def test_streaming_dedup_matches_batch_clusters(spark, tmp_path):
     sketch_sink = str(tmp_path / "sk")
     pairs_sink = str(tmp_path / "pairs")
     ckpt = str(tmp_path / "ckpt")
+    cfg = DedupConfig(sketch=CFG, jaccard_threshold=0.5, max_bucket_size=4)
 
+    def rows(*specs):
+        return spark.createDataFrame(
+            [(cid, i, "user", text, None, None) for cid, i, text in specs], TRANSCRIPT_SCHEMA
+        )
+
+    hot = "the same boilerplate notice repeated in every copy of this ticket " * 3
+    extra = [
+        # shorter than k: linked only through the exact-digest path
+        rows(("s0", 0, "ok"), ("t0", 0, "hey"),
+             # exact group {g0, g1, g2}: its star anchor g0 grows in wave 2
+             ("g0", 0, "hi"), ("g1", 0, "hi"), ("g2", 0, "hi")),
+        rows(("s1", 0, "ok"), ("t1", 0, "hey"),
+             # five byte-identical copies in one wave, over the cap of 4
+             *[(f"h{i}", 0, hot) for i in range(5)]),
+        rows(("s2", 0, "ok"), ("g0", 1, "there")),
+    ]
     turns = synthetic_transcripts(spark, n_base=15, dup_factor=2, seed=21).cache()
-    # arrival in 3 waves of WHOLE conversations (conv index mod 3)
+    # arrival in 3 waves of WHOLE synthetic conversations (conv index mod 3)
     idx = F.substring("conv_id", 2, 10).cast("long")
     for wave in range(3):
-        turns.where(idx % 3 == wave).coalesce(1).write.mode("append").parquet(src)
+        turns.where(idx % 3 == wave).unionByName(extra[wave]) \
+            .coalesce(1).write.mode("append").parquet(src)
+    turns = turns.unionByName(extra[0]).unionByName(extra[1]).unionByName(extra[2])
 
     stream = spark.readStream.schema(TRANSCRIPT_SCHEMA).option(
         "maxFilesPerTrigger", "1"
     ).parquet(src)
-    bands_sink = str(tmp_path / "bands")
-    q = start_dedup_stream(spark, stream, CFG, sketch_sink, pairs_sink, ckpt,
-                           jaccard_threshold=0.5, bands_sink=bands_sink)
+    q = start_dedup_stream(spark, stream, cfg, sketch_sink, pairs_sink, ckpt)
     try:
         q.processAllAvailable()
     finally:
@@ -173,15 +196,9 @@ def test_streaming_dedup_matches_batch_clusters(spark, tmp_path):
 
     # the bands sink's current view must equal bands recomputed from the
     # current sketches (their source of truth)
-    from minimizer_jaccard_estimator_spark.operators.lsh import band_hashes
-    from minimizer_jaccard_estimator_spark.streaming.sketch_stream import (
-        latest_bands,
-        latest_sketches,
-    )
-
     got_bands = {
         (r.conv_id, r.band_id, r.band_hash)
-        for r in latest_bands(spark, bands_sink).collect()
+        for r in latest_bands(spark, sketch_sink + "__bands").collect()
     }
     want_bands = {
         (r.conv_id, r.band_id, r.band_hash)
@@ -189,30 +206,40 @@ def test_streaming_dedup_matches_batch_clusters(spark, tmp_path):
     }
     assert got_bands == want_bands
 
-    stream_pairs = {
-        (r.id_a, r.id_b)
-        for r in latest_accepted_pairs(spark, pairs_sink).where("j_mini >= 0.5").collect()
-    }
-
-    batch = run_dedup(spark, turns, DedupConfig(sketch=CFG, jaccard_threshold=0.5))
+    batch = run_dedup(spark, turns, cfg)
     batch_pairs = {
         tuple(sorted((r.id_a, r.id_b)))
         for r in batch.verified.where("j_mini >= 0.5").collect()
+    } | {
+        tuple(sorted((r.id_a, r.id_b)))
+        for r in exact_dup_pairs(assemble_conversations(turns)).collect()
     }
-    # exact equality: streaming regenerates candidates vs the whole corpus
-    # on every update, so every batch-accepted pair (incl. exact dups, which
-    # share all bands) must appear, and verification math is identical
+    # exact equality: streaming probes every update against the whole
+    # corpus, and every digest group here arrives with its min id first, so
+    # the streamed star anchors are batch's min-id anchors
+    stream_pairs = {(r.id_a, r.id_b) for r in latest_accepted_pairs(spark, pairs_sink).collect()}
     assert stream_pairs == batch_pairs
 
-    # cluster equality over every conversation that joined a cluster
-    comp_s = connected_components(
-        latest_accepted_pairs(spark, pairs_sink).where("j_mini >= 0.5")
-    )
+    comp_s = connected_components(latest_accepted_pairs(spark, pairs_sink).select("id_a", "id_b"))
     ours = {r["conv_id"]: r["cluster_id"] for r in comp_s.collect()}
     theirs = {r["conv_id"]: r["cluster_id"] for r in batch.clusters.collect()}
     assert ours, "fixture must produce clusters"
-    for cid, root in ours.items():
-        assert theirs[cid] == root, cid
+    # both directions: every conversation's streamed cluster (itself when
+    # streaming linked it to nothing) is its batch cluster
+    assert set(ours) <= set(theirs)
+    for cid, root in theirs.items():
+        assert ours.get(cid, cid) == root, cid
+
+    assert {ours[f"s{i}"] for i in range(3)} == {"s0"} and ours["t1"] == "t0"
+    assert ours["g1"] == ours["g2"] == "g1" and "g0" not in ours
+    # the hot copies: linked through the digest path, their buckets dropped
+    assert all(ours[f"h{i}"] == "h0" for i in range(1, 5))
+    verdicts = latest_verified_pairs(spark, pairs_sink).where("id_a = 'h0'").collect()
+    assert len(verdicts) == 4 and all(r.exact for r in verdicts)
+    dropped = spark.read.parquet(sketch_sink + "__dropped_buckets")
+    hot_buckets = {(r.band_id, r.band_hash) for r in
+                   latest_bands(spark, sketch_sink + "__bands").where("conv_id = 'h0'").collect()}
+    assert hot_buckets <= {(r.band_id, r.band_hash) for r in dropped.where("n_docs = 5").collect()}
 
 
 def test_stream_matches_batch_nulls_and_unicode(spark, tmp_path):
@@ -298,6 +325,7 @@ def test_stream_restart_from_checkpoint(spark, tmp_path):
 def test_streaming_pair_retraction(spark, tmp_path):
     """A pair accepted early must be retracted once one side grows apart —
     the latest verdict wins even when the pair no longer shares any band."""
+    from minimizer_jaccard_estimator_spark.operators.dedup import DedupConfig
     from minimizer_jaccard_estimator_spark.streaming.sketch_stream import (
         latest_accepted_pairs,
         latest_verified_pairs,
@@ -318,9 +346,8 @@ def test_streaming_pair_retraction(spark, tmp_path):
     stream = spark.readStream.schema(TRANSCRIPT_SCHEMA).option(
         "maxFilesPerTrigger", "1"
     ).parquet(src)
-    q = start_dedup_stream(spark, stream, CFG, str(tmp_path / "sk"),
-                           str(tmp_path / "pairs"), str(tmp_path / "ck"),
-                           jaccard_threshold=0.5)
+    q = start_dedup_stream(spark, stream, DedupConfig(sketch=CFG, jaccard_threshold=0.5),
+                           str(tmp_path / "sk"), str(tmp_path / "pairs"), str(tmp_path / "ck"))
     try:
         q.processAllAvailable()
     finally:
